@@ -1,12 +1,14 @@
 package graft.feature
 
-import graft.stats.{MRMR, MutualInformation, RowMRMR, RowScore, SelectionScore}
+import graft.stats.{CellTable, MRMR, MutualInformation, RowMRMR, RowScore,
+  SelectionScore}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 import scala.collection.mutable
 
@@ -141,200 +143,91 @@ object IterativeFeatureSelection {
     pairMIMulti(data, batch.map(c => (c, other)), maxCategories)
       .map { case ((c, _), v) => c -> v }
 
-  /** One distributed job: MI for an arbitrary list of (cand, other) column
-    * pairs (`other == -1` is the label column).
-    *
-    * Shape: explode each row into one (cand, candValue, other, otherValue)
-    * struct per requested pair — the pair list is baked into the expression
-    * tree as literals, so whole-stage codegen survives any batch size —
-    * hash-aggregate the distinct tuples (partial map-side combine bounds
-    * the shuffle by distinct-tuple count, not rows), then window-aggregate
-    * marginals and fold into one MI value per pair, all distributed; the
-    * driver receives exactly |pairs| doubles. This is what keeps driver
-    * memory O(pairs) instead of the reference's O(pairs · levels²)
-    * (`reference:IterativeFeatureSelection.scala:97` collects every
-    * distinct tuple).
+  /** Session-lifetime statistics cache for [[pairStats]]: MI and chi2
+    * depend only on the input RELATION and the column pair, so each pair's
+    * fused (mi, chi2, lx, ly, n) tuple is cached individually under the
+    * canonicalized logical plan (Catalyst's own same-result identity — the
+    * key two equivalent `.select` chains share, and two different parquet
+    * dirs never do) — the shared [[graft.ops.PlanKey]] file-identity key,
+    * absent when the plan does not identify the contents (see its
+    * scaladoc for the staleness/collision analysis). Per-PAIR granularity
+    * means any later request is served for its cached subset and pays
+    * one counting job for only the missing pairs — sound because
+    * [[pairStatsFused]] rounds to 12 decimals exactly so that batch
+    * composition cannot change a pair's value. A feature-statistics cache
+    * in the CBO tradition, NOT cached data: a fit over a matrix another
+    * query already profiled (the Estimator gate re-fitting what
+    * `selectTopK` just selected, a chi2 relevance query after an MI
+    * profile) repeats no corpus-scale counting, and cached hits still
+    * derive dof / Cramér's V without a job.
     */
-  /** Session-lifetime statistics cache for [[pairMIMulti]]: MI depends
-    * only on the input RELATION and the column pair, so each pair's scalar
-    * is cached individually under the canonicalized logical plan
-    * (Catalyst's own same-result identity — the key two equivalent
-    * `.select` chains share, and two different parquet dirs never do).
-    * Per-PAIR granularity means any later request is served for its
-    * cached subset and pays one counting job for only the missing pairs —
-    * sound because pairMIMulti rounds to 12 decimals exactly so that
-    * batch composition cannot change a pair's value. A feature-statistics
-    * cache in the CBO tradition, NOT cached data: a fit over a matrix
-    * another query already profiled (the Estimator gate re-fitting what
-    * `selectTopK` just selected, a relevance query re-reading what the
-    * full pair table computed) repeats no corpus-scale counting.
-    */
-  private val miStatsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), scala.collection.concurrent.TrieMap[(Int, Int), Double]]
-
-  /** Chi-square twin of [[miStatsCache]]: same per-pair granularity, same
-    * file-backed-plan key, same 12-decimal stabilization — a repeated
-    * chi2 relevance query over an already-profiled matrix costs zero
-    * counting jobs. Values are the full (chi2, lx, ly, n) tuple so cached
-    * hits can still derive dof / Cramér's V without a job.
-    */
-  private val chi2StatsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int),
-      scala.collection.concurrent.TrieMap[(Int, Int), (Double, Long, Long, Long)]]
-
-  /** Cache key for `data`, or None when its contents are not identified by
-    * its plan — the shared [[graft.ops.PlanKey]] file-identity key (see
-    * its scaladoc for the staleness/collision analysis).
-    */
-  private def statsCacheKey(data: DataFrame): Option[String] =
-    graft.ops.PlanKey.of(data)
+  private val pairStatsCache = scala.collection.concurrent.TrieMap
+    .empty[(String, Int), scala.collection.concurrent.TrieMap[(Int, Int),
+      (Double, Double, Long, Long, Long)]]
 
   /** Distinct (cand, other, cv, ov) cell counts for every pair over one
-    * pass of `src` — the shared counting stage of [[pairMIMulti]] and
-    * [[pairChi2Multi]], and the CPU-dominant stage of any profiling call
-    * (rows × |pairs| tuples).
+    * pass of `src` — the counting stage of [[pairStatsFused]], and the
+    * CPU-dominant stage of any profiling call (rows × |pairs| tuples).
     *
     * Imperative per-partition contingency instead of
     * `crossJoin(pairs) → groupBy().count()`: the Catalyst spelling pays
     * an UnsafeRow projection + hash-probe per expanded tuple (~4× the
     * cost of an array probe, measured end-to-end); here each input row is
     * read ONCE at the InternalRow level (no boxing, no row expansion) and
-    * counted into an open-addressed primitive map keyed
-    * (pairIdx, cvBits, ovBits). Map size is bounded by flush-on-full:
-    * at [[CellFlushCap]] entries the partial cells are emitted and the
-    * map restarts — the downstream merge `groupBy` re-sums duplicates, so
-    * memory stays bounded for pathological (continuous-valued) inputs
-    * without a separate fallback path. NULL values ride as a
-    * non-canonical NaN bit pattern `doubleToLongBits` can never produce,
-    * and real values canonicalize through `doubleToLongBits`, so NaN
-    * dedup and null-as-group-key semantics match the SQL spelling; ±0.0
-    * (kept distinct here) merges in the downstream groupBy exactly as
-    * Spark's float normalization would.
+    * counted into a [[graft.stats.CellCounter]] keyed (pairIdx, cvBits,
+    * ovBits), whose flush-on-full bounds memory. NULL values (and
+    * positions past a short array) count as their own level, so NaN dedup
+    * and null-as-group-key semantics match the SQL spelling.
     *
     * Emitted rows ≈ partitions × Σ_pairs levels² (plus flush duplicates)
     * — the same post-combine bound as the hash aggregate's partial side;
     * the merge shuffle is identical. Scale behavior is unchanged, only
     * the per-tuple constant drops.
     */
-  private val NullBits = 0x7ff8000000000001L // non-canonical NaN pattern
-  private val CellFlushCap = 1 << 20
-
   private[graft] def pairCellCounts(src: DataFrame,
                                     pairs: Seq[(Int, Int)]): DataFrame = {
-    val spark = src.sparkSession
     val cands = pairs.map(_._1).toArray
     val others = pairs.map(_._2).toArray
     val nP = cands.length
     val rdd = src
       .select(col("label").cast("double"), col("f").cast("array<double>"))
       .queryExecution.toRdd
-      .mapPartitions { iter =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        var cap = 1 << 12
-        var mask = cap - 1
-        var keysP = new Array[Int](cap)
-        var keysCv = new Array[Long](cap)
-        var keysOv = new Array[Long](cap)
-        var cnts = new Array[Long](cap)
-        var used = new Array[Boolean](cap)
-        var size = 0
-        def emit(i: Int): Unit = {
-          val cvB = keysCv(i); val ovB = keysOv(i)
-          out += org.apache.spark.sql.Row(
-            cands(keysP(i)), others(keysP(i)),
-            if (cvB == NullBits) null
-            else java.lang.Double.longBitsToDouble(cvB),
-            if (ovB == NullBits) null
-            else java.lang.Double.longBitsToDouble(ovB),
-            cnts(i))
+      .mapPartitions(CellTable.countPartition(_, "pair") { (row, counter) =>
+        val labB = CellTable.bitsAt(row, 0)
+        val arr = if (row.isNullAt(1)) null else row.getArray(1)
+        val aLen = if (arr == null) 0 else arr.numElements()
+        var p = 0
+        while (p < nP) {
+          val c = cands(p)
+          val o = others(p)
+          counter.add(p,
+            if (c < aLen) CellTable.bitsAt(arr, c) else CellTable.NullBits,
+            if (o < 0) labB
+            else if (o < aLen) CellTable.bitsAt(arr, o)
+            else CellTable.NullBits)
+          p += 1
         }
-        def flush(): Unit = {
-          var i = 0
-          while (i < cap) { if (used(i)) emit(i); i += 1 }
-          java.util.Arrays.fill(used, false)
-          size = 0
-          // A partition emitting millions of distinct cells means some
-          // column's cardinality is far past any usable maxCategories —
-          // the post-aggregation guard would throw anyway; throw the
-          // same contract error here before the buffer can OOM.
-          if (out.size > (4 << 20)) throw new IllegalArgumentException(
-            s"pair contingency exceeded ${4 << 20} distinct cells in one " +
-              "partition — a profiled column's cardinality is far above " +
-              "maxCategories (discretize it first)")
-        }
-        def grow(): Unit = {
-          val oK = keysP; val oCv = keysCv; val oOv = keysOv
-          val oC = cnts; val oU = used; val oCap = cap
-          cap <<= 1; mask = cap - 1
-          keysP = new Array[Int](cap); keysCv = new Array[Long](cap)
-          keysOv = new Array[Long](cap); cnts = new Array[Long](cap)
-          used = new Array[Boolean](cap)
-          var i = 0
-          while (i < oCap) {
-            if (oU(i)) {
-              var j = (scala.util.hashing.byteswap64(
-                oK(i) * 0x9e3779b97f4a7c15L + oCv(i) * 31 + oOv(i))
-                & mask).toInt
-              while (used(j)) j = (j + 1) & mask
-              keysP(j) = oK(i); keysCv(j) = oCv(i); keysOv(j) = oOv(i)
-              cnts(j) = oC(i); used(j) = true
-            }
-            i += 1
-          }
-        }
-        def add(p: Int, cvB: Long, ovB: Long): Unit = {
-          var j = (scala.util.hashing.byteswap64(
-            p * 0x9e3779b97f4a7c15L + cvB * 31 + ovB) & mask).toInt
-          while (used(j) && !(keysP(j) == p && keysCv(j) == cvB &&
-            keysOv(j) == ovB)) j = (j + 1) & mask
-          if (used(j)) cnts(j) += 1
-          else {
-            keysP(j) = p; keysCv(j) = cvB; keysOv(j) = ovB
-            cnts(j) = 1L; used(j) = true; size += 1
-            if (size >= CellFlushCap) flush()
-            else if (size * 5 >= cap * 3) grow()
-          }
-        }
-        def bitsOf(nullAt: Boolean, v: => Double): Long =
-          if (nullAt) NullBits
-          else java.lang.Double.doubleToLongBits(v)
-        iter.foreach { row =>
-          val labB = bitsOf(row.isNullAt(0), row.getDouble(0))
-          val fNull = row.isNullAt(1)
-          val arr = if (fNull) null else row.getArray(1)
-          val aLen = if (fNull) 0 else arr.numElements()
-          var p = 0
-          while (p < nP) {
-            val c = cands(p)
-            val cvB =
-              if (fNull || c >= aLen) NullBits
-              else bitsOf(arr.isNullAt(c), arr.getDouble(c))
-            val o = others(p)
-            val ovB =
-              if (o < 0) labB
-              else if (fNull || o >= aLen) NullBits
-              else bitsOf(arr.isNullAt(o), arr.getDouble(o))
-            add(p, cvB, ovB)
-            p += 1
-          }
-        }
-        flush()
-        out.iterator
-      }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cand",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("other",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("cv", DoubleType),
-      org.apache.spark.sql.types.StructField("ov", DoubleType),
-      org.apache.spark.sql.types.StructField("c", LongType,
-        nullable = false)))
-    spark.createDataFrame(rdd, schema)
+      } { (p, cv, ov, c) => Row(cands(p.toInt), others(p.toInt), cv, ov, c) })
+    val schema = StructType(Seq(
+      StructField("cand", IntegerType, nullable = false),
+      StructField("other", IntegerType, nullable = false),
+      StructField("cv", DoubleType),
+      StructField("ov", DoubleType),
+      StructField("c", LongType, nullable = false)))
+    src.sparkSession.createDataFrame(rdd, schema)
       .groupBy("cand", "other", "cv", "ov")
       .agg(sum(col("c")).as("c"))
   }
+
+  /** MI in nats, Σ (c/n)·ln((c/n) / ((cx/n)·(cy/n))), over rows carrying a
+    * cell count `c` and its window marginals `n`, `cx`, `cy`.
+    */
+  private def miFold: Column =
+    sum((col("c") / col("n")) *
+      log((col("c") / col("n")) /
+        ((col("cx") / col("n")) * (col("cy") / col("n")))))
+
+  private def round12(v: Double): Double = math.rint(v * 1e12) / 1e12
 
   /** One FUSED counting pass (guide §1.2 "don't compute things twice"):
     * the MI fold and the chi2 fold read the identical
@@ -342,25 +235,25 @@ object IterativeFeatureSelection {
     * marginals (n, cx, cy) — only the final per-pair reduction differs,
     * and that reduction is a handful of agg expressions over the same
     * grouped rows. Computing BOTH statistics per pass costs ~nothing on
-    * top of the counting stage (which dominates at any scale) and fills
-    * BOTH stat caches, so whichever family runs second (chi2 relevance
-    * after an MI profile, or vice versa) pays zero counting jobs instead
-    * of re-scanning the corpus. Expressions are spelled exactly as the
-    * two separate folds spelled them (same casts, same operation order),
-    * and both values round to 12 decimals — bit-identical to the
-    * unfused results.
+    * top of the counting stage (which dominates at any scale), and
+    * [[pairStats]] caches both, so whichever family runs second (chi2
+    * relevance after an MI profile, or vice versa) pays zero counting
+    * jobs instead of re-scanning the corpus. Expressions are spelled
+    * exactly as the two separate folds spelled them (same casts, same
+    * operation order), and both values round to 12 decimals —
+    * bit-identical to the unfused results.
     *
     * @return per pair: (mi, chi2, lx, ly, n)
     */
   private def pairStatsFused(data: DataFrame, pairs: Seq[(Int, Int)],
                              maxCategories: Int)
   : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
-    // The explode below multiplies each input row ×|pairs| and is the
+    // The cell counter below reads each input row ×|pairs| and is the
     // CPU-bound stage of the whole selection — its parallelism must not be
     // whatever split count the scan happened to produce (a small input is
-    // one parquet split → the 12M-tuple expansion runs on ONE core;
+    // one parquet split → all row × pair tuples are counted on ONE core;
     // measured 5s versus 0.7s spread over the machine). One narrow
-    // pre-explode shuffle of (label, f) rows is orders of magnitude
+    // pre-count shuffle of (label, f) rows is orders of magnitude
     // cheaper. On a real multi-TB input the scan already has ≥ cores
     // splits and this is a no-op.
     val par = data.sparkSession.sparkContext.defaultParallelism
@@ -379,9 +272,7 @@ object IterativeFeatureSelection {
         n.as("n"), cx.as("cx"), cy.as("cy"))
       .groupBy("cand", "other")
       .agg(
-        sum((col("c") / col("n")) *
-          log((col("c") / col("n")) /
-            ((col("cx") / col("n")) * (col("cy") / col("n"))))).as("mi"),
+        miFold.as("mi"),
         (max(col("n")) * sum(col("c").cast("double") *
           col("c").cast("double") /
           (col("cx").cast("double") * col("cy").cast("double")))
@@ -405,55 +296,46 @@ object IterativeFeatureSelection {
     // repeated runs) see bit-identical memo values. (MI ≤ ln(levels), so
     // the scaled value is well inside exact double range.)
     folded.map(r => (r.getInt(0), r.getInt(1)) ->
-      ((math.rint(r.getDouble(2) * 1e12) / 1e12,
-        math.rint(r.getDouble(3) * 1e12) / 1e12,
+      ((round12(r.getDouble(2)), round12(r.getDouble(3)),
         r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
   }
 
-  /** Store a fused-pass result in both stat caches (under the same
-    * (planKey, maxCategories) key): each pass computes both statistics,
-    * so the sibling family's next request is already served.
+  /** Fused (mi, chi2, lx, ly, n) per pair: served from
+    * [[pairStatsCache]] where cached, one [[pairStatsFused]] job for the
+    * rest.
     */
-  private def cacheFused(key: Option[String], maxCategories: Int,
-                         stats: Map[(Int, Int),
-                           (Double, Double, Long, Long, Long)]): Unit =
-    key.foreach { k =>
-      val miPc = miStatsCache.getOrElseUpdate((k, maxCategories),
-        scala.collection.concurrent.TrieMap.empty)
-      val chiPc = chi2StatsCache.getOrElseUpdate((k, maxCategories),
-        scala.collection.concurrent.TrieMap.empty)
-      stats.foreach { case (p, (mi, chi2, lx, ly, n)) =>
-        miPc.put(p, mi)
-        chiPc.put(p, (chi2, lx, ly, n))
-        ()
-      }
-    }
-
-  private[graft] def pairMIMulti(data: DataFrame, allPairs: Seq[(Int, Int)],
-                                 maxCategories: Int)
-  : Map[(Int, Int), Double] = {
+  private def pairStats(data: DataFrame, allPairs: Seq[(Int, Int)],
+                        maxCategories: Int)
+  : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
     require(allPairs.nonEmpty, "pairs must be non-empty")
-    val key = statsCacheKey(data)
-    val planCache = key
-      .map(k => miStatsCache.getOrElseUpdate((k, maxCategories),
+    val planCache = graft.ops.PlanKey.of(data)
+      .map(k => pairStatsCache.getOrElseUpdate((k, maxCategories),
         scala.collection.concurrent.TrieMap.empty))
-    val cached: Map[(Int, Int), Double] = planCache match {
-      case Some(pc) => allPairs.flatMap(p => pc.get(p).map(p -> _)).toMap
-      case None     => Map.empty
-    }
+    val cached = planCache.fold(
+      Map.empty[(Int, Int), (Double, Double, Long, Long, Long)])(pc =>
+      allPairs.flatMap(p => pc.get(p).map(p -> _)).toMap)
     val pairs = allPairs.filterNot(cached.contains)
     if (pairs.isEmpty) return cached
     val stats = pairStatsFused(data, pairs, maxCategories)
-    cacheFused(key, maxCategories, stats)
-    cached ++ stats.map { case (p, (mi, _, _, _, _)) => p -> mi }
+    planCache.foreach(_ ++= stats)
+    cached ++ stats
   }
+
+  /** One distributed job (none when every pair is cached): MI for an
+    * arbitrary list of (cand, other) column pairs (`other == -1` is the
+    * label column).
+    */
+  private[graft] def pairMIMulti(data: DataFrame, allPairs: Seq[(Int, Int)],
+                                 maxCategories: Int)
+  : Map[(Int, Int), Double] =
+    pairStats(data, allPairs, maxCategories).map { case (p, s) => p -> s._1 }
 
   /** One distributed job: Pearson chi-square statistic for an arbitrary
     * list of (cand, other) column pairs (`other == -1` is the label
     * column) — the classic univariate alternative to MI relevance
     * (sklearn's chi2 / SelectKBest shape). Same physical plan as
-    * [[pairMIMulti]]: broadcast pair table → explode → partial
-    * hash-aggregate of distinct tuples → window marginals → one fold per
+    * [[pairMIMulti]]: per-partition cell counter ([[pairCellCounts]]) →
+    * keyed sum of the partial cells → window marginals → one fold per
     * pair; the driver receives |pairs| scalars, never a contingency
     * matrix, so the 100 TB contract is identical.
     *
@@ -464,25 +346,10 @@ object IterativeFeatureSelection {
     */
   private[graft] def pairChi2Multi(data: DataFrame, allPairs: Seq[(Int, Int)],
                                    maxCategories: Int)
-  : Map[(Int, Int), (Double, Long, Long, Long)] = {
-    require(allPairs.nonEmpty, "pairs must be non-empty")
-    val key = statsCacheKey(data)
-    val planCache = key
-      .map(k => chi2StatsCache.getOrElseUpdate((k, maxCategories),
-        scala.collection.concurrent.TrieMap.empty))
-    val cached: Map[(Int, Int), (Double, Long, Long, Long)] =
-      planCache match {
-        case Some(pc) => allPairs.flatMap(p => pc.get(p).map(p -> _)).toMap
-        case None     => Map.empty
-      }
-    val pairs = allPairs.filterNot(cached.contains)
-    if (pairs.isEmpty) return cached
-    val stats = pairStatsFused(data, pairs, maxCategories)
-    cacheFused(key, maxCategories, stats)
-    cached ++ stats.map { case (p, (_, chi2, lx, ly, n)) =>
-      p -> ((chi2, lx, ly, n))
+  : Map[(Int, Int), (Double, Long, Long, Long)] =
+    pairStats(data, allPairs, maxCategories).map {
+      case (p, (_, chi2, lx, ly, n)) => p -> ((chi2, lx, ly, n))
     }
-  }
 
   /** Block-partitioned alternate encoding — the scale-free spelling of
     * [[selectRows]]. The matrix is stored as (featureId, blockId,
@@ -502,14 +369,13 @@ object IterativeFeatureSelection {
     * raise with the offending blockId rather than silently computing MI
     * over a subset.
     *
-    * Physical plan per selection: the blocked matrix is hash-partitioned
-    * by blockId once and cached (MEMORY_AND_DISK — k rounds re-read it);
-    * round 0 joins it with the label blocks on blockId, every later round
-    * joins the remaining candidates with the NEWEST WINNER's blocks (a
-    * 1/features fraction of the data — the join's build side), then a
-    * per-partition primitive contingency pass (same machinery class as
-    * [[pairCellCounts]]: one InternalRow-level read per value, no row
-    * expansion, flush-on-full bound) merges through ONE keyed
+    * Physical plan per selection: round 0 joins the blocked matrix with
+    * the label blocks on blockId, every later round joins the remaining
+    * candidates with the NEWEST WINNER's blocks (a 1/features fraction of
+    * the data — the join's build side), then a per-partition contingency
+    * pass (the same [[graft.stats.CellCounter]] as [[pairCellCounts]]: one
+    * InternalRow-level read per value, no row expansion, flush-on-full
+    * bound) merges through ONE keyed
     * `groupBy().sum()` into a windowed MI fold. The driver receives
     * O(features) doubles per round — never a vector, never a contingency
     * matrix. Same math as [[MutualInformation.fromVectors]] (the dense
@@ -546,175 +412,102 @@ object IterativeFeatureSelection {
     val labels = labelBlocks.select(
         col(blockCol).cast(LongType).as("bid"),
         col(valuesCol).cast("array<double>").as("ys"))
-    try {
-      // Round 0: MI(feature, label) for every feature, one job. `n` rides
-      // along to enforce the tiling contract: every feature must cover
-      // exactly the label's instance count.
-      val nInstances = labels
-        .agg(sum(size(col("ys")))).head().getLong(0)
-      // Tiling contract, stray-block direction: the inner join below
-      // silently DROPS any feature block whose bid is absent from the
-      // label tiling, and the n == nInstances coverage check cannot see
-      // that (the matched blocks still cover exactly the label's
-      // instances) — MI would be computed over a subset of the feature's
-      // data without raising. One anti-join against the label bids (a
-      // broadcast-sized side) catches it before any MI is computed.
-      val stray = data.join(labels.select(col("bid")), Seq("bid"),
-          "left_anti")
-        .select(col("id"), col("bid")).limit(1).collect()
-      stray.headOption.foreach { r =>
-        throw new IllegalArgumentException(
-          s"blocked alternate encoding: feature ${r.getLong(0)} carries " +
-            s"stray block ${r.getLong(1)} absent from the label tiling — " +
-            "feature and label tilings must be identical")
-      }
-      val relRows = blockMIPerId(data.join(labels, "bid"))
-      relRows.foreach { case (id, (_, n)) =>
-        require(n == nInstances,
-          s"blocked alternate encoding: feature $id covers $n instances " +
-            s"but the label row has $nInstances — missing or ragged blocks")
-      }
-      val rel = relRows.map { case (id, (mi, _)) => id -> mi }
-      val k = math.min(num.toLong, rel.size.toLong).toInt
-      val redSum = mutable.Map.empty[Long, Double].withDefaultValue(0.0)
-      val selected = mutable.ArrayBuffer.empty[(Long, Double)]
-      val remaining = mutable.Set.empty[Long] ++ rel.keys
-      while (selected.size < k) {
-        val sSize = selected.size
-        val (wid, wscore) = remaining.iterator
-          .map(id => (id,
-            if (sSize == 0) rel(id) else rel(id) - redSum(id) / sSize))
-          .reduce { (a, b) =>
-            if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b
-          }
-        selected += ((wid, wscore))
-        remaining -= wid
-        if (selected.size < k) {
-          // MI(candidate, winner) for every remaining candidate: the
-          // winner's blocks re-keyed as the "label" side of the same fold.
-          val winner = data.filter(col("id") === wid)
-            .select(col("bid"), col("xs").as("ys"))
-          val cands = data.filter(col("id") =!= wid &&
-            !col("id").isin(selected.map(_._1).toSeq: _*))
-          blockMIPerId(cands.join(winner, "bid")).foreach {
-            case (id, (mi, _)) => redSum(id) = redSum(id) + mi
-          }
+    // Round 0: MI(feature, label) for every feature, one job. `n` rides
+    // along to enforce the tiling contract: every feature must cover
+    // exactly the label's instance count.
+    val nInstances = labels
+      .agg(sum(size(col("ys")))).head().getLong(0)
+    // Tiling contract, stray-block direction: the inner join below
+    // silently DROPS any feature block whose bid is absent from the
+    // label tiling, and the n == nInstances coverage check cannot see
+    // that (the matched blocks still cover exactly the label's
+    // instances) — MI would be computed over a subset of the feature's
+    // data without raising. One anti-join against the label bids (a
+    // broadcast-sized side) catches it before any MI is computed.
+    val stray = data.join(labels.select(col("bid")), Seq("bid"),
+        "left_anti")
+      .select(col("id"), col("bid")).limit(1).collect()
+    stray.headOption.foreach { r =>
+      throw new IllegalArgumentException(
+        s"blocked alternate encoding: feature ${r.getLong(0)} carries " +
+          s"stray block ${r.getLong(1)} absent from the label tiling — " +
+          "feature and label tilings must be identical")
+    }
+    val relRows = blockMIPerId(data.join(labels, "bid"))
+    relRows.foreach { case (id, (_, n)) =>
+      require(n == nInstances,
+        s"blocked alternate encoding: feature $id covers $n instances " +
+          s"but the label row has $nInstances — missing or ragged blocks")
+    }
+    val rel = relRows.map { case (id, (mi, _)) => id -> mi }
+    val k = math.min(num.toLong, rel.size.toLong).toInt
+    val redSum = mutable.Map.empty[Long, Double].withDefaultValue(0.0)
+    val selected = mutable.ArrayBuffer.empty[(Long, Double)]
+    val remaining = mutable.Set.empty[Long] ++ rel.keys
+    while (selected.size < k) {
+      val sSize = selected.size
+      val (wid, wscore) = remaining.iterator
+        .map(id => (id,
+          if (sSize == 0) rel(id) else rel(id) - redSum(id) / sSize))
+        .reduce(better)
+      selected += ((wid, wscore))
+      remaining -= wid
+      if (selected.size < k) {
+        // MI(candidate, winner) for every remaining candidate: the
+        // winner's blocks re-keyed as the "label" side of the same fold.
+        val winner = data.filter(col("id") === wid)
+          .select(col("bid"), col("xs").as("ys"))
+        val cands = data.filter(col("id") =!= wid &&
+          !col("id").isin(selected.map(_._1).toSeq: _*))
+        blockMIPerId(cands.join(winner, "bid")).foreach {
+          case (id, (mi, _)) => redSum(id) = redSum(id) + mi
         }
       }
-      selected.toSeq
-    } finally { () }
+    }
+    selected.toSeq
   }
 
   /** MI per feature id over joined (id, xs, ys) block records — the
-    * blocked path's counting + fold stage. Per partition, an
-    * open-addressed primitive map counts (id, xBits, yBits) cells in one
-    * InternalRow-level pass (flush-on-full keeps memory bounded exactly
-    * as [[pairCellCounts]]); the partials merge through one keyed
+    * blocked path's counting + fold stage. Per partition, a
+    * [[graft.stats.CellCounter]] counts (id, xBits, yBits) cells in one
+    * InternalRow-level pass, NULL counted as a level exactly as in
+    * [[pairCellCounts]]; the partials merge through one keyed
     * `groupBy().sum()` and fold into one (mi, n) pair per id via window
     * marginals. Returns 12-decimal-rounded MI (same stabilization
-    * rationale as [[pairMIMulti]]) plus the instance count n for the
+    * rationale as [[pairStatsFused]]) plus the instance count n for the
     * caller's tiling check.
     */
   private[graft] def blockMIPerId(joined: DataFrame)
   : Map[Long, (Double, Long)] = {
-    val spark = joined.sparkSession
     val rdd = joined
       .select(col("id"), col("xs"), col("ys"))
       .queryExecution.toRdd
-      .mapPartitions { iter =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        var cap = 1 << 12
-        var mask = cap - 1
-        var keysId = new Array[Long](cap)
-        var keysXv = new Array[Long](cap)
-        var keysYv = new Array[Long](cap)
-        var cnts = new Array[Long](cap)
-        var used = new Array[Boolean](cap)
-        var size = 0
-        def emit(i: Int): Unit = {
-          val xB = keysXv(i); val yB = keysYv(i)
-          out += org.apache.spark.sql.Row(
-            keysId(i),
-            if (xB == NullBits) null
-            else java.lang.Double.longBitsToDouble(xB),
-            if (yB == NullBits) null
-            else java.lang.Double.longBitsToDouble(yB),
-            cnts(i))
+      .mapPartitions(CellTable.countPartition(_, "blocked") { (row, counter) =>
+        val id = row.getLong(0)
+        if (row.isNullAt(1) || row.isNullAt(2))
+          throw new IllegalArgumentException(
+            s"blocked alternate encoding: feature $id has a block whose " +
+              "feature or label values array is null — feature and label " +
+              "tilings must be identical")
+        val xs = row.getArray(1)
+        val ys = row.getArray(2)
+        val nX = xs.numElements(); val nY = ys.numElements()
+        if (nX != nY) throw new IllegalArgumentException(
+          s"blocked alternate encoding: feature $id has a block of " +
+            s"length $nX where the label block has length $nY — " +
+            "feature and label tilings must be identical")
+        var i = 0
+        while (i < nX) {
+          counter.add(id, CellTable.bitsAt(xs, i), CellTable.bitsAt(ys, i))
+          i += 1
         }
-        def flush(): Unit = {
-          var i = 0
-          while (i < cap) { if (used(i)) emit(i); i += 1 }
-          java.util.Arrays.fill(used, false)
-          size = 0
-          if (out.size > (4 << 20)) throw new IllegalArgumentException(
-            s"blocked contingency exceeded ${4 << 20} distinct cells in " +
-              "one partition — a feature's cardinality is far above any " +
-              "usable maxCategories (discretize it first)")
-        }
-        def grow(): Unit = {
-          val oI = keysId; val oX = keysXv; val oY = keysYv
-          val oC = cnts; val oU = used; val oCap = cap
-          cap <<= 1; mask = cap - 1
-          keysId = new Array[Long](cap); keysXv = new Array[Long](cap)
-          keysYv = new Array[Long](cap); cnts = new Array[Long](cap)
-          used = new Array[Boolean](cap)
-          var i = 0
-          while (i < oCap) {
-            if (oU(i)) {
-              var j = (scala.util.hashing.byteswap64(
-                oI(i) * 0x9e3779b97f4a7c15L + oX(i) * 31 + oY(i))
-                & mask).toInt
-              while (used(j)) j = (j + 1) & mask
-              keysId(j) = oI(i); keysXv(j) = oX(i); keysYv(j) = oY(i)
-              cnts(j) = oC(i); used(j) = true
-            }
-            i += 1
-          }
-        }
-        def add(id: Long, xB: Long, yB: Long): Unit = {
-          var j = (scala.util.hashing.byteswap64(
-            id * 0x9e3779b97f4a7c15L + xB * 31 + yB) & mask).toInt
-          while (used(j) && !(keysId(j) == id && keysXv(j) == xB &&
-            keysYv(j) == yB)) j = (j + 1) & mask
-          if (used(j)) cnts(j) += 1
-          else {
-            keysId(j) = id; keysXv(j) = xB; keysYv(j) = yB
-            cnts(j) = 1L; used(j) = true; size += 1
-            if (size >= CellFlushCap) flush()
-            else if (size * 5 >= cap * 3) grow()
-          }
-        }
-        iter.foreach { row =>
-          val id = row.getLong(0)
-          val xs = row.getArray(1)
-          val ys = row.getArray(2)
-          val nX = xs.numElements(); val nY = ys.numElements()
-          if (nX != nY) throw new IllegalArgumentException(
-            s"blocked alternate encoding: feature $id has a block of " +
-              s"length $nX where the label block has length $nY — " +
-              "feature and label tilings must be identical")
-          var i = 0
-          while (i < nX) {
-            val xB = if (xs.isNullAt(i)) NullBits
-              else java.lang.Double.doubleToLongBits(xs.getDouble(i))
-            val yB = if (ys.isNullAt(i)) NullBits
-              else java.lang.Double.doubleToLongBits(ys.getDouble(i))
-            add(id, xB, yB)
-            i += 1
-          }
-        }
-        flush()
-        out.iterator
-      }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("cv", DoubleType),
-      org.apache.spark.sql.types.StructField("ov", DoubleType),
-      org.apache.spark.sql.types.StructField("c", LongType,
-        nullable = false)))
-    val counts = spark.createDataFrame(rdd, schema)
+      } { (id, xv, yv, c) => Row(id, xv, yv, c) })
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("cv", DoubleType),
+      StructField("ov", DoubleType),
+      StructField("c", LongType, nullable = false)))
+    val counts = joined.sparkSession.createDataFrame(rdd, schema)
       .groupBy("id", "cv", "ov")
       .agg(sum(col("c")).as("c"))
     val n = sum("c").over(Window.partitionBy("id"))
@@ -724,15 +517,17 @@ object IterativeFeatureSelection {
       .select(col("id"), col("c"), n.as("n"), cx.as("cx"), cy.as("cy"))
       .groupBy("id")
       .agg(
-        sum((col("c") / col("n")) *
-          log((col("c") / col("n")) /
-            ((col("cx") / col("n")) * (col("cy") / col("n"))))).as("mi"),
+        miFold.as("mi"),
         max(col("n")).as("n"))
       .collect()
       .map(r => r.getLong(0) ->
-        ((math.rint(r.getDouble(1) * 1e12) / 1e12, r.getLong(2))))
+        ((round12(r.getDouble(1)), r.getLong(2))))
       .toMap
   }
+
+  /** The alternate drivers' argmax: (score desc, id asc). */
+  private def better(a: (Long, Double), b: (Long, Double)): (Long, Double) =
+    if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b
 
   /** Alternate encoding: features are rows, instances are columns. Each
     * record is (featureId, valueVector); per-instance class labels arrive as
@@ -783,8 +578,7 @@ object IterativeFeatureSelection {
                                     featuresCol: String, num: Int,
                                     labelsRow: Vector)
   : Seq[(Long, Double)] = {
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
+    val sc = df.sparkSession.sparkContext
     val bLabels = sc.broadcast(labelsRow)
     // The per-round loop runs on the RDD API deliberately: each round is a
     // trivial map + reduce over already-cached candidates, and going
@@ -802,16 +596,9 @@ object IterativeFeatureSelection {
         RowCandidate(r.getLong(0), v,
           MutualInformation.fromVectors(v, bLabels.value), 0.0)
       }.cache()
-    val dbg = sys.env.contains("GRAFT_DEBUG_TIMING")
-    def t0 = System.nanoTime()
-    def lap(t: Long, what: String): Unit =
-      if (dbg) println(f"[ifs-rows] $what ${(System.nanoTime() - t) / 1e9}%7.2f s")
-    val tc = t0
     val k = math.min(num.toLong, cands.count()).toInt
-    lap(tc, "cands build+count")
     val selected = mutable.ArrayBuffer.empty[(Long, Double)]
     while (selected.size < k) {
-      val tr = t0
       val sSize = selected.size
       // Winner by (score desc, id asc) in ONE reduce job — only scalar
       // (id, score) pairs travel; the winning vector is fetched separately
@@ -820,17 +607,11 @@ object IterativeFeatureSelection {
       val (wid, wscore) = cands
         .map(c => (c.id,
           if (sSize == 0) c.rel else c.rel - c.redSum / sSize))
-        .reduce { (a, b) =>
-          if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b
-        }
+        .reduce(better)
       selected += ((wid, wscore))
-      lap(tr, s"round $sSize winner")
       if (selected.size < k) {
-        val tw = t0
         val winVec = cands.filter(_.id == wid).first().vec
-        lap(tw, s"round $sSize winvec fetch")
         val bWin = sc.broadcast(winVec)
-        val tn = t0
         val next = cands
           .filter(_.id != wid)
           .map(c => c.copy(
@@ -838,7 +619,6 @@ object IterativeFeatureSelection {
               bWin.value)))
           .cache()
         next.count() // materialize before dropping the parent
-        lap(tn, s"round $sSize redSum update")
         cands.unpersist()
         cands = next
       }
@@ -849,15 +629,14 @@ object IterativeFeatureSelection {
 
   /** General path for user-supplied row scores: the reference's shape
     * (broadcast all selected vectors, score every candidate each round) with
-    * the physical fixes — cached input, and winner id+score+vector fetched
-    * in a single TakeOrderedAndProject job instead of three scans.
+    * the physical fixes — cached input, and the winner's id and score from
+    * one reduce job and its vector from one lookup instead of three scans.
     */
   private def selectRowsGeneric(df: DataFrame, idCol: String,
                                 featuresCol: String, num: Int,
                                 labelsRow: Vector, score: RowScore)
   : Seq[(Long, Double)] = {
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
+    val sc = df.sparkSession.sparkContext
     val bLabels = sc.broadcast(labelsRow)
     // Same RDD-loop rationale as selectRowsIncremental.
     val data: org.apache.spark.rdd.RDD[(Long, Vector)] = df
@@ -868,23 +647,19 @@ object IterativeFeatureSelection {
     val k = math.min(num.toLong, data.count()).toInt
     val selected = mutable.ArrayBuffer.empty[(Long, Double)]
     val selectedVecs = mutable.ArrayBuffer.empty[Vector]
-    val desc = score.higherIsBetter
+    // Lower-is-better scores are negated into the (score desc, id asc)
+    // argmax and back; negation is exact, so ties and order are kept.
+    val sign = if (score.higherIsBetter) 1.0 else -1.0
     while (selected.size < k) {
       val bSel = sc.broadcast(selectedVecs.toSeq)
       val selIds = selected.map(_._1).toSet
       val (wid, wscore) = data
         .filter { case (id, _) => !selIds.contains(id) }
         .map { case (id, v) =>
-          (id, score.score(v, bLabels.value, bSel.value))
+          (id, sign * score.score(v, bLabels.value, bSel.value))
         }
-        .reduce { (a, b) =>
-          val aWins =
-            if (a._2 == b._2) a._1 < b._1
-            else if (desc) a._2 > b._2
-            else a._2 < b._2
-          if (aWins) a else b
-        }
-      selected += ((wid, wscore))
+        .reduce(better)
+      selected += ((wid, sign * wscore))
       selectedVecs += data.filter(_._1 == wid).first()._2
     }
     data.unpersist()

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.stats.MutualInformation
+import graft.stats.{CellTable, MutualInformation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 
@@ -18,78 +18,13 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
   */
 object MIAggregate {
 
-  // ---- flat open-addressed pair-count table -------------------------------
-  //
-  // The buffer is a plain Array[Long] (natively encoded — ArrayType(Long),
-  // no Kryo): an open-addressed hash table of 3-long slots
-  // [xBits, yBits, count], count == 0 marking an empty slot (real counts are
-  // always ≥ 1). Levels are keyed on the raw `doubleToLongBits` patterns —
-  // exact 128-bit keys, no string building, no boxing. `reduce`/`merge`
-  // mutate the array in place and return it (the documented Aggregator
-  // fast path; ObjectHashAggregate keeps the live buffer as an object and
-  // only encodes on spill/shuffle), so the per-row cost is one hash probe —
-  // the same primitive-encoding idea as graft.stats.LongIntMap, flattened
-  // into an encodable array. Capacity is bounded by distinct level pairs
-  // (the engine's maxCategories guard), never by row count.
-
-  private final val SlotSize = 3
-  private final val InitialSlots = 16 // power of two
-  // Array index 0 holds the occupied-slot count so the 3/4-load check is
-  // O(1) per insertion (a full-table rescan per new key would make k
-  // distinct-pair ingestion O(k²)); slots start at index `Header`.
-  private final val Header = 1
-
-  private def hashSlot(xBits: Long, yBits: Long, nSlots: Int): Int = {
-    var h = xBits * -7046029254386353131L
-    h ^= (h >>> 32)
-    h ^= yBits * 0x9e3779b97f4a7c15L
-    h ^= (h >>> 29)
-    (h & (nSlots - 1)).toInt
-  }
-
-  /** Add `c` to the (xBits, yBits) cell, growing if needed; returns the
-    * (possibly reallocated) table.
-    */
-  private def add(t0: Array[Long], xBits: Long, yBits: Long,
-                  c: Long): Array[Long] = {
-    var t = if (t0.length == 0)
-              new Array[Long](Header + InitialSlots * SlotSize)
-            else t0
-    val nSlots = (t.length - Header) / SlotSize
-    var s = hashSlot(xBits, yBits, nSlots)
-    var probes = 0
-    while (true) {
-      val base = Header + s * SlotSize
-      if (t(base + 2) == 0L) {
-        // empty: claim it, growing first if past 3/4 load
-        if ((t(0) + 1) * 4 > nSlots * 3) {
-          t = grow(t)
-          return add(t, xBits, yBits, c)
-        }
-        t(base) = xBits; t(base + 1) = yBits; t(base + 2) = c
-        t(0) += 1
-        return t
-      }
-      if (t(base) == xBits && t(base + 1) == yBits) {
-        t(base + 2) += c
-        return t
-      }
-      s = (s + 1) & (nSlots - 1)
-      probes += 1
-      require(probes <= nSlots, "MIAggregate: hash table full") // unreachable
-    }
-    t // unreachable
-  }
-
-  private def grow(t: Array[Long]): Array[Long] = {
-    var nt = new Array[Long](Header + (t.length - Header) * 2)
-    var i = Header
-    while (i < t.length) {
-      if (t(i + 2) != 0L) nt = add(nt, t(i), t(i + 1), t(i + 2))
-      i += SlotSize
-    }
-    nt
-  }
+  // The buffer is a graft.stats.CellTable with key 0: a plain Array[Long]
+  // (natively encoded — ArrayType(Long), no Kryo) holding an open-addressed
+  // table of exact (xBits, yBits) → count cells. `reduce`/`merge` mutate the
+  // array in place and return it (the documented Aggregator fast path;
+  // ObjectHashAggregate keeps the live buffer as an object and only encodes
+  // on spill/shuffle), so the per-row cost is one hash probe. Capacity is
+  // bounded by distinct level pairs, never by row count.
 
   /** Inputs are boxed so a NULL in either column is representable: a null
     * pair contributes nothing (SQL-aggregate convention — `corr`, `covar`
@@ -105,32 +40,19 @@ object MIAggregate {
       override def reduce(b: Array[Long],
           a: (java.lang.Double, java.lang.Double)): Array[Long] = {
         if (a._1 == null || a._2 == null) b
-        else add(b,
+        else CellTable.add(b, 0L,
           java.lang.Double.doubleToLongBits(a._1.doubleValue),
           java.lang.Double.doubleToLongBits(a._2.doubleValue), 1L)
       }
 
-      override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-        // fold the smaller table into the larger one
-        val (small, large) = if (b1.length < b2.length) (b1, b2) else (b2, b1)
-        var acc = large
-        var i = Header
-        while (i < small.length) {
-          if (small(i + 2) != 0L)
-            acc = add(acc, small(i), small(i + 1), small(i + 2))
-          i += SlotSize
-        }
-        acc
-      }
+      override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
+        CellTable.merge(b1, b2)
 
       override def finish(b: Array[Long]): Double = {
         val triples = Seq.newBuilder[(Double, Double, Long)]
-        var i = Header
-        while (i < b.length) {
-          if (b(i + 2) != 0L)
-            triples += ((java.lang.Double.longBitsToDouble(b(i)),
-              java.lang.Double.longBitsToDouble(b(i + 1)), b(i + 2)))
-          i += SlotSize
+        CellTable.foreach(b) { (_, x, y, c) =>
+          triples += ((java.lang.Double.longBitsToDouble(x),
+            java.lang.Double.longBitsToDouble(y), c))
         }
         MutualInformation.fromPairCounts(triples.result())
       }

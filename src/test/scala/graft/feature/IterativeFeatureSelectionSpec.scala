@@ -242,6 +242,18 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
         stray, "id", "bid", "values", lab, num = 2)
     }
     assert(messages(ex3).exists(_.contains("stray block")))
+    // a feature block whose values array is null → the same contract
+    // error naming the feature, not an executor NullPointerException
+    val nulled = feat.withColumn("values",
+      org.apache.spark.sql.functions.expr(
+        "CASE WHEN id = 2 AND bid = 1 THEN CAST(NULL AS array<double>) " +
+          "ELSE values END"))
+    val ex4 = intercept[Exception] {
+      IterativeFeatureSelection.selectRowsBlocked(
+        nulled, "id", "bid", "values", lab, num = 2)
+    }
+    assert(messages(ex4).exists(m =>
+      m.contains("feature 2") && m.contains("values array is null")))
   }
 
   test("pairChi2Multi matches a naive driver-side chi-square") {

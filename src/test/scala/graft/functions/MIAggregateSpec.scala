@@ -54,4 +54,24 @@ class MIAggregateSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     out("a") shouldBe math.log(2.0) +- 1e-12
     out("b") shouldBe 0.0 +- 1e-12
   }
+
+  it should "match the pure MI when grown buffers merge across partitions" in {
+    val s = spark
+    import s.implicits._
+    // 6 × 5 = 30 distinct cells, past the buffer's first growth, in every
+    // one of 4 partial buffers that the final merge then folds together
+    val rnd = new scala.util.Random(11)
+    val xy = (0 until 600).map { i =>
+      val x = (i % 6).toDouble
+      (x, if (rnd.nextInt(3) == 0) (i % 5).toDouble else x % 5)
+    }
+    val agg = xy.toDF("x", "y").repartition(4)
+      .agg(MIAggregate.mi($"x", $"y")).head().getDouble(0)
+    val expected = MutualInformation.fromPairCounts(
+      xy.groupBy(identity).map { case ((x, y), g) =>
+        (x, y, g.size.toLong)
+      }.toSeq)
+    xy.distinct.size shouldBe 30
+    agg shouldBe expected +- 1e-12
+  }
 }
