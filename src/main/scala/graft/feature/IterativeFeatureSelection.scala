@@ -4,11 +4,10 @@ import graft.stats.{CellTable, MRMR, MutualInformation, RowMRMR, RowScore,
   SelectionScore}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
-  StructField, StructType}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import scala.collection.mutable
 
@@ -29,10 +28,10 @@ case class RowCandidate(id: Long, vec: Vector, rel: Double, redSum: Double)
   *     `countByValue` that collects every distinct tuple to the driver)
   *     becomes a per-partition primitive contingency map
   *     ([[pairCellCounts]] — one InternalRow-level pass, no row
-  *     expansion) whose per-partition cells merge through ONE keyed
-  *     `groupBy().sum()` into a windowed MI aggregation planned by
-  *     Catalyst. Only one MI value per (candidate, other) pair ever
-  *     reaches the driver, so driver memory is O(features), not
+  *     expansion) whose per-pair table chunks merge in ONE `reduceByKey`
+  *     and fold to MI on the executors ([[graft.stats.CellTable.foldByKey]]):
+  *     one job per counting call. Only one MI value per (candidate, other)
+  *     pair ever reaches the driver, so driver memory is O(features), not
   *     O(features · levels²) — the property that lets this run against
   *     100 TB inputs.
   *   - MI terms are memoized across rounds (reference recomputes every round
@@ -165,9 +164,10 @@ object IterativeFeatureSelection {
     .empty[(String, Int), scala.collection.concurrent.TrieMap[(Int, Int),
       (Double, Double, Long, Long, Long)]]
 
-  /** Distinct (cand, other, cv, ov) cell counts for every pair over one
-    * pass of `src` — the counting stage of [[pairStatsFused]], and the
-    * CPU-dominant stage of any profiling call (rows × |pairs| tuples).
+  /** Per-pair contingency tables over one pass of `src`, as
+    * (pair index into `pairs`, [[graft.stats.CellTable]] chunk) records —
+    * the counting stage of [[pairStatsFused]], and the CPU-dominant stage
+    * of any profiling call (rows × |pairs| cells).
     *
     * Imperative per-partition contingency instead of
     * `crossJoin(pairs) → groupBy().count()`: the Catalyst spelling pays
@@ -179,17 +179,16 @@ object IterativeFeatureSelection {
     * positions past a short array) count as their own level, so NaN dedup
     * and null-as-group-key semantics match the SQL spelling.
     *
-    * Emitted rows ≈ partitions × Σ_pairs levels² (plus flush duplicates)
-    * — the same post-combine bound as the hash aggregate's partial side;
-    * the merge shuffle is identical. Scale behavior is unchanged, only
-    * the per-tuple constant drops.
+    * Emitted chunks ≈ partitions × |pairs| tables of ≤ levels² cells
+    * (plus one set per extra flush) — the same post-combine bound as a
+    * hash aggregate's partial side.
     */
-  private[graft] def pairCellCounts(src: DataFrame,
-                                    pairs: Seq[(Int, Int)]): DataFrame = {
+  private[graft] def pairCellCounts(src: DataFrame, pairs: Seq[(Int, Int)])
+  : RDD[(Long, Array[Long])] = {
     val cands = pairs.map(_._1).toArray
     val others = pairs.map(_._2).toArray
     val nP = cands.length
-    val rdd = src
+    src
       .select(col("label").cast("double"), col("f").cast("array<double>"))
       .queryExecution.toRdd
       .mapPartitions(CellTable.countPartition(_, "pair") { (row, counter) =>
@@ -207,41 +206,21 @@ object IterativeFeatureSelection {
             else CellTable.NullBits)
           p += 1
         }
-      } { (p, cv, ov, c) => Row(cands(p.toInt), others(p.toInt), cv, ov, c) })
-    val schema = StructType(Seq(
-      StructField("cand", IntegerType, nullable = false),
-      StructField("other", IntegerType, nullable = false),
-      StructField("cv", DoubleType),
-      StructField("ov", DoubleType),
-      StructField("c", LongType, nullable = false)))
-    src.sparkSession.createDataFrame(rdd, schema)
-      .groupBy("cand", "other", "cv", "ov")
-      .agg(sum(col("c")).as("c"))
+      })
   }
-
-  /** MI in nats, Σ (c/n)·ln((c/n) / ((cx/n)·(cy/n))), over rows carrying a
-    * cell count `c` and its window marginals `n`, `cx`, `cy`.
-    */
-  private def miFold: Column =
-    sum((col("c") / col("n")) *
-      log((col("c") / col("n")) /
-        ((col("cx") / col("n")) * (col("cy") / col("n")))))
 
   private def round12(v: Double): Double = math.rint(v * 1e12) / 1e12
 
   /** One FUSED counting pass (guide §1.2 "don't compute things twice"):
-    * the MI fold and the chi2 fold read the identical
-    * [[pairCellCounts]] contingency stream and the identical window
-    * marginals (n, cx, cy) — only the final per-pair reduction differs,
-    * and that reduction is a handful of agg expressions over the same
-    * grouped rows. Computing BOTH statistics per pass costs ~nothing on
-    * top of the counting stage (which dominates at any scale), and
-    * [[pairStats]] caches both, so whichever family runs second (chi2
-    * relevance after an MI profile, or vice versa) pays zero counting
-    * jobs instead of re-scanning the corpus. Expressions are spelled
-    * exactly as the two separate folds spelled them (same casts, same
-    * operation order), and both values round to 12 decimals —
-    * bit-identical to the unfused results.
+    * [[pairCellCounts]] → one `reduceByKey` of the per-pair tables → one
+    * executor-side fold per pair ([[graft.stats.CellTable.foldByKey]]),
+    * which yields MI and chi2 from the same merged table and marginals.
+    * Computing BOTH statistics per pass costs ~nothing on top of the
+    * counting stage (which dominates at any scale), and [[pairStats]]
+    * caches both, so whichever family runs second (chi2 relevance after
+    * an MI profile, or vice versa) pays zero counting jobs instead of
+    * re-scanning the corpus. One job; the driver receives |pairs| scalar
+    * tuples, and both values round to 12 decimals.
     *
     * @return per pair: (mi, chi2, lx, ly, n)
     */
@@ -259,45 +238,25 @@ object IterativeFeatureSelection {
     val par = data.sparkSession.sparkContext.defaultParallelism
     val src =
       if (data.rdd.getNumPartitions < par) data.repartition(par) else data
-    val counts = pairCellCounts(src, pairs)
-    val n = sum("c").over(Window.partitionBy("cand", "other"))
-    val cx = sum("c").over(Window.partitionBy("cand", "other", "cv"))
-    val cy = sum("c").over(Window.partitionBy("cand", "other", "ov"))
-    // chi2 via the identity n·Σ_obs(c²/(cx·cy)) − n, which equals the
-    // Pearson statistic INCLUDING the expected-count mass of zero-count
-    // (absent) cells — summing (c−e)²/e over observed cells only would
-    // understate chi2 whenever the contingency table is sparse.
-    val folded = counts
-      .select(col("cand"), col("other"), col("cv"), col("ov"), col("c"),
-        n.as("n"), cx.as("cx"), cy.as("cy"))
-      .groupBy("cand", "other")
-      .agg(
-        miFold.as("mi"),
-        (max(col("n")) * sum(col("c").cast("double") *
-          col("c").cast("double") /
-          (col("cx").cast("double") * col("cy").cast("double")))
-          - max(col("n"))).as("chi2"),
-        count_distinct(col("cv")).as("lx"),
-        count_distinct(col("ov")).as("ly"),
-        max(col("n")).cast(LongType).as("n"))
-      .collect()
-    folded.foreach { r =>
-      val levels = r.getLong(4)
+    val ps = pairs.toIndexedSeq
+    val folded = CellTable.foldByKey(pairCellCounts(src, ps), ps.size)
+    folded.foreach { case (p, (_, _, levels, _, _)) =>
       if (levels > maxCategories) throw new IllegalArgumentException(
-        s"column ${r.getInt(0)} has $levels distinct values, " +
+        s"column ${ps(p.toInt)._1} has $levels distinct values, " +
           s"more than maxCategories = $maxCategories")
     }
-    // Round to 12 decimals: the distributed sum's partial-aggregation
-    // order varies with which OTHER pairs share the job (all-pairs fast
-    // path vs per-round batches), drifting results by ~1e-15 — enough to
-    // flip the greedy argmax on mathematically-tied scores, making the
-    // SELECTED SET depend on the batchSize perf knob. 12 decimals is far
-    // above the drift and far below any real MI gap, so both paths (and
-    // repeated runs) see bit-identical memo values. (MI ≤ ln(levels), so
-    // the scaled value is well inside exact double range.)
-    folded.map(r => (r.getInt(0), r.getInt(1)) ->
-      ((round12(r.getDouble(2)), round12(r.getDouble(3)),
-        r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
+    // Round to 12 decimals: the fold's summation order follows the merged
+    // table's layout, which varies with which OTHER pairs share the job
+    // (all-pairs fast path vs per-round batches) and with partitioning,
+    // drifting results by ~1e-15 — enough to flip the greedy argmax on
+    // mathematically-tied scores, making the SELECTED SET depend on the
+    // batchSize perf knob. 12 decimals is far above the drift and far
+    // below any real MI gap, so both paths (and repeated runs) see
+    // bit-identical memo values. (MI ≤ ln(levels), so the scaled value is
+    // well inside exact double range.)
+    folded.map { case (p, (mi, chi2, lx, ly, n)) =>
+      ps(p.toInt) -> ((round12(mi), round12(chi2), lx, ly, n))
+    }.toMap
   }
 
   /** Fused (mi, chi2, lx, ly, n) per pair: served from
@@ -334,10 +293,11 @@ object IterativeFeatureSelection {
     * list of (cand, other) column pairs (`other == -1` is the label
     * column) — the classic univariate alternative to MI relevance
     * (sklearn's chi2 / SelectKBest shape). Same physical plan as
-    * [[pairMIMulti]]: per-partition cell counter ([[pairCellCounts]]) →
-    * keyed sum of the partial cells → window marginals → one fold per
-    * pair; the driver receives |pairs| scalars, never a contingency
-    * matrix, so the 100 TB contract is identical.
+    * [[pairMIMulti]], the same fused pass: per-partition cell counter
+    * ([[pairCellCounts]]) → one `reduceByKey` of the per-pair tables →
+    * one executor-side fold per pair; the driver receives |pairs|
+    * scalars, never a contingency matrix, so the 100 TB contract is
+    * identical.
     *
     * @return per pair: (chi2, distinct levels of cand, distinct levels of
     *         other, total count n) — enough for the caller to derive
@@ -375,8 +335,8 @@ object IterativeFeatureSelection {
     * the data — the join's build side), then a per-partition contingency
     * pass (the same [[graft.stats.CellCounter]] as [[pairCellCounts]]: one
     * InternalRow-level read per value, no row expansion, flush-on-full
-    * bound) merges through ONE keyed
-    * `groupBy().sum()` into a windowed MI fold. The driver receives
+    * bound) whose per-feature tables merge in ONE `reduceByKey` and fold
+    * to MI on the executors ([[blockMIPerId]]). The driver receives
     * O(features) doubles per round — never a vector, never a contingency
     * matrix. Same math as [[MutualInformation.fromVectors]] (the dense
     * zero cells it infers are counted explicitly here — identical result),
@@ -471,15 +431,15 @@ object IterativeFeatureSelection {
     * blocked path's counting + fold stage. Per partition, a
     * [[graft.stats.CellCounter]] counts (id, xBits, yBits) cells in one
     * InternalRow-level pass, NULL counted as a level exactly as in
-    * [[pairCellCounts]]; the partials merge through one keyed
-    * `groupBy().sum()` and fold into one (mi, n) pair per id via window
-    * marginals. Returns 12-decimal-rounded MI (same stabilization
-    * rationale as [[pairStatsFused]]) plus the instance count n for the
-    * caller's tiling check.
+    * [[pairCellCounts]]; the per-id tables merge in one `reduceByKey` and
+    * fold on the executors ([[graft.stats.CellTable.foldByKey]]), one job.
+    * Returns 12-decimal-rounded MI (same stabilization rationale as
+    * [[pairStatsFused]]) plus the instance count n for the caller's tiling
+    * check.
     */
   private[graft] def blockMIPerId(joined: DataFrame)
   : Map[Long, (Double, Long)] = {
-    val rdd = joined
+    val chunks = joined
       .select(col("id"), col("xs"), col("ys"))
       .queryExecution.toRdd
       .mapPartitions(CellTable.countPartition(_, "blocked") { (row, counter) =>
@@ -501,27 +461,11 @@ object IterativeFeatureSelection {
           counter.add(id, CellTable.bitsAt(xs, i), CellTable.bitsAt(ys, i))
           i += 1
         }
-      } { (id, xv, yv, c) => Row(id, xv, yv, c) })
-    val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("cv", DoubleType),
-      StructField("ov", DoubleType),
-      StructField("c", LongType, nullable = false)))
-    val counts = joined.sparkSession.createDataFrame(rdd, schema)
-      .groupBy("id", "cv", "ov")
-      .agg(sum(col("c")).as("c"))
-    val n = sum("c").over(Window.partitionBy("id"))
-    val cx = sum("c").over(Window.partitionBy("id", "cv"))
-    val cy = sum("c").over(Window.partitionBy("id", "ov"))
-    counts
-      .select(col("id"), col("c"), n.as("n"), cx.as("cx"), cy.as("cy"))
-      .groupBy("id")
-      .agg(
-        miFold.as("mi"),
-        max(col("n")).as("n"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((round12(r.getDouble(1)), r.getLong(2))))
+      })
+    // the ids are not known before the job: the merge is as wide as the
+    // default parallelism
+    CellTable.foldByKey(chunks, Int.MaxValue)
+      .map { case (id, (mi, _, _, _, n)) => id -> ((round12(mi), n)) }
       .toMap
   }
 

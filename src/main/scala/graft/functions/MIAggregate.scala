@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.stats.{CellTable, MutualInformation}
+import graft.stats.CellTable
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 
@@ -8,8 +8,9 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
   * categorical columns — the SURVEY.md §7.4 "contingency aggregation as a
   * custom aggregate" realized: pair counts accumulate MAP-SIDE into the
   * aggregation buffer (partial aggregation bounds the shuffle by distinct
-  * levels², not rows — the same property the explode→groupBy MI path gets
-  * from Catalyst, here packaged as a reusable group-aware aggregate), and
+  * levels², not rows — the same property the IFS counting passes get
+  * from their per-partition cell counter, here packaged as a reusable
+  * group-aware aggregate), and
   * the tiny count map folds to one double per group in `finish`.
   *
   * Usable anywhere an aggregate goes: `df.groupBy(g).agg(MIAggregate.mi(x,
@@ -24,7 +25,9 @@ object MIAggregate {
   // array in place and return it (the documented Aggregator fast path;
   // ObjectHashAggregate keeps the live buffer as an object and only encodes
   // on spill/shuffle), so the per-row cost is one hash probe. Capacity is
-  // bounded by distinct level pairs, never by row count.
+  // bounded by distinct level pairs, never by row count. `finish` is the
+  // IFS core's own fold (CellTable.foldTable): ±0.0 are one level and every
+  // NaN is one level, as in the conventional and blocked IFS paths.
 
   /** Inputs are boxed so a NULL in either column is representable: a null
     * pair contributes nothing (SQL-aggregate convention — `corr`, `covar`
@@ -48,14 +51,7 @@ object MIAggregate {
       override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
         CellTable.merge(b1, b2)
 
-      override def finish(b: Array[Long]): Double = {
-        val triples = Seq.newBuilder[(Double, Double, Long)]
-        CellTable.foreach(b) { (_, x, y, c) =>
-          triples += ((java.lang.Double.longBitsToDouble(x),
-            java.lang.Double.longBitsToDouble(y), c))
-        }
-        MutualInformation.fromPairCounts(triples.result())
-      }
+      override def finish(b: Array[Long]): Double = CellTable.foldTable(b)._1
 
       override def bufferEncoder: Encoder[Array[Long]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()

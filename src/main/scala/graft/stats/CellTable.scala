@@ -1,6 +1,7 @@
 package graft.stats
 
-import org.apache.spark.sql.Row
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 
@@ -20,8 +21,8 @@ private[graft] trait CellSink {
   * open-addressed 4-long slots [key, xBits, yBits, count], count == 0
   * marking an empty slot (real counts are always ≥ 1). Levels are keyed on
   * raw `doubleToLongBits` patterns — exact keys, no boxing — so NaN,
-  * [[NullBits]] and ±0.0 stay distinct cells (a downstream SQL `groupBy`
-  * merges ±0.0 exactly as Spark's float normalization would). Capacity is
+  * [[NullBits]] and ±0.0 stay distinct cells ([[foldTable]] merges ±0.0
+  * exactly as Spark's float normalization would). Capacity is
   * bounded by distinct cells, never by row count. `add` mutates the table
   * in place and returns it, reallocated when it grows.
   */
@@ -33,7 +34,7 @@ private[graft] object CellTable {
   val NullBits = 0x7ff8000000000001L
 
   /** Distinct cells a [[CellCounter]] holds before it emits them and
-    * restarts; the downstream merge `groupBy` re-sums the duplicates.
+    * restarts; [[foldByKey]]'s merge re-sums the duplicates.
     */
   val FlushCap: Int = 1 << 20
 
@@ -100,22 +101,67 @@ private[graft] object CellTable {
   }
 
   /** Count one partition of a Spark counting pass: `read` feeds each input
-    * row's cells to the counter, and every emitted cell becomes one output
-    * row `toRow(key, x, y, count)`, with x and y decoded back to doubles
-    * ([[NullBits]] → null). `what` names the pass in the guard's error.
+    * row's cells to the counter, and the cells of every flush leave as
+    * one (key, table) chunk per key — lazily, so the partition holds at
+    * most one flush's cells besides the counter. `what` names the pass in
+    * the guard's error.
     */
   def countPartition(rows: Iterator[InternalRow], what: String)(
-      read: (InternalRow, CellCounter) => Unit)(
-      toRow: (Long, Any, Any, Long) => Row): Iterator[Row] = {
-    def decode(bits: Long): Any =
-      if (bits == NullBits) null else java.lang.Double.longBitsToDouble(bits)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val counter = new CellCounter(what,
-      (k, x, y, c) => out += toRow(k, decode(x), decode(y), c))
-    rows.foreach(read(_, counter))
-    counter.flush()
-    out.iterator
+      read: (InternalRow, CellCounter) => Unit)
+  : Iterator[(Long, Array[Long])] = {
+    val chunks = scala.collection.mutable.LongMap.empty[Array[Long]]
+    val counter = new CellCounter(what, (k, x, y, c) =>
+      chunks(k) = add(chunks.getOrElse(k, Array.emptyLongArray), k, x, y, c))
+    Iterator.unfold(false) { done =>
+      if (done) None
+      else {
+        while (chunks.isEmpty && rows.hasNext) read(rows.next(), counter)
+        val last = !rows.hasNext
+        if (last) counter.flush()
+        val out = chunks.toArray
+        chunks.clear()
+        Some((out, last))
+      }
+    }.flatten
   }
+
+  /** Merge every key's chunks (one shuffle, min(`keys`, default
+    * parallelism) wide) and fold each merged table on the executors with
+    * [[foldTable]]: one job, and the driver receives one
+    * (mi, chi², lx, ly, n) per key, never a table.
+    */
+  def foldByKey(chunks: RDD[(Long, Array[Long])], keys: Int)
+  : Array[(Long, (Double, Double, Long, Long, Long))] = {
+    val width = math.max(1,
+      math.min(keys, chunks.sparkContext.defaultParallelism))
+    chunks.reduceByKey(new HashPartitioner(width), merge _)
+      .mapValues(foldTable)
+      .collect()
+  }
+
+  /** (mi in nats, Pearson chi², lx, ly, n) of one key's cells, keys
+    * ignored: ±0.0 fold into one level, NaN is one level, and NULL
+    * ([[NullBits]]) is its own level in MI and chi² but is not counted in
+    * `lx`/`ly` (SQL `count(DISTINCT)` semantics).
+    */
+  def foldTable(t: Array[Long]): (Double, Double, Long, Long, Long) = {
+    val dictX = new LongIntMap
+    val dictY = new LongIntMap
+    val cells = new LongLongMap
+    var nullX = 0
+    var nullY = 0
+    foreach(t) { (_, x, y, c) =>
+      if (x == NullBits) nullX = 1
+      if (y == NullBits) nullY = 1
+      val ix = dictX.getOrInsert(if (x == NegZeroBits) 0L else x)
+      val iy = dictY.getOrInsert(if (y == NegZeroBits) 0L else y)
+      cells.add((ix.toLong << 32) | iy.toLong, c)
+    }
+    val (mi, chi2, n) = MutualInformation.fold(cells, dictX.size, dictY.size)
+    (mi, chi2, dictX.size - nullX, dictY.size - nullY, n)
+  }
+
+  private final val NegZeroBits = java.lang.Double.doubleToLongBits(-0.0)
 }
 
 /** One partition's [[CellTable]]: counts cells one at a time and, at

@@ -14,36 +14,72 @@ import scala.collection.mutable
   *     the two vectors is non-zero are touched; the (0,0) cell count is
   *     inferred as `size − touched` without iterating the zero-zero mass.
   *
-  * Values are treated as exact categorical levels (`==` grouping) — never as
-  * ordered quantities. Discretization is the caller's job.
+  * Values are treated as exact categorical levels (`==` grouping, as in
+  * Spark's own grouping: ±0.0 are one level, every NaN is one level) —
+  * never as ordered quantities. Discretization is the caller's job.
   */
 object MutualInformation {
 
   /** MI from co-occurrence counts given as (levelX, levelY, count) triples.
-    * Triples with the same (x, y) key are summed. Runs driver- or
-    * executor-local; inputs are bounded by the engine's maxCategories guard.
+    * Triples with the same (x, y) key are summed and triples with a count
+    * ≤ 0 contribute nothing; every NaN is one level
+    * (boxed NaNs never compare equal, so levels are keyed through
+    * [[level]]). Runs driver- or executor-local; inputs are bounded by the
+    * engine's maxCategories guard.
     */
   def fromPairCounts[X, Y](counts: Iterable[(X, Y, Long)]): Double = {
-    val cxy = mutable.Map.empty[(X, Y), Long]
+    val dictX = mutable.HashMap.empty[Any, Int]
+    val dictY = mutable.HashMap.empty[Any, Int]
+    val cells = new LongLongMap
     counts.foreach { case (x, y, c) =>
-      if (c != 0L) cxy.updateWith((x, y))(v => Some(v.getOrElse(0L) + c))
-    }
-    val n = cxy.valuesIterator.sum.toDouble
-    if (n == 0.0) return 0.0
-    val cx = mutable.Map.empty[X, Long]
-    val cy = mutable.Map.empty[Y, Long]
-    cxy.foreach { case ((x, y), c) =>
-      cx.updateWith(x)(v => Some(v.getOrElse(0L) + c))
-      cy.updateWith(y)(v => Some(v.getOrElse(0L) + c))
-    }
-    var mi = 0.0
-    cxy.foreach { case ((x, y), c) =>
       if (c > 0L) {
-        val pxy = c / n
-        mi += pxy * math.log(pxy / ((cx(x) / n) * (cy(y) / n)))
+        val ix = dictX.getOrElseUpdate(level(x), dictX.size)
+        val iy = dictY.getOrElseUpdate(level(y), dictY.size)
+        cells.add((ix.toLong << 32) | iy.toLong, c)
       }
     }
-    mi
+    fold(cells, dictX.size, dictY.size)._1
+  }
+
+  /** Grouping key of a level: all NaNs map to one key. ±0.0 need no case,
+    * boxed doubles already compare and hash them equal.
+    */
+  private def level(v: Any): Any = v match {
+    case d: Double if d.isNaN => NaNLevel
+    case _ => v
+  }
+  private object NaNLevel
+
+  /** The one MI fold: (MI in nats, Pearson chi², n) of dense-id cells
+    * `(ix << 32 | iy) → count` over `nx` × `ny` levels. chi² uses the
+    * identity n·Σ c²/(cx·cy) − n, which equals the Pearson statistic
+    * INCLUDING the expected-count mass of absent cells — summing
+    * (c−e)²/e over observed cells only would understate chi² whenever the
+    * contingency table is sparse.
+    */
+  private[stats] def fold(cells: LongLongMap, nx: Int, ny: Int)
+  : (Double, Double, Long) = {
+    val cx = new Array[Long](nx)
+    val cy = new Array[Long](ny)
+    var n = 0L
+    cells.foreachEntry { (k, c) =>
+      cx((k >>> 32).toInt) += c
+      cy((k & 0xffffffffL).toInt) += c
+      n += c
+    }
+    val nd = n.toDouble
+    var mi = 0.0
+    var s = 0.0
+    cells.foreachEntry { (k, c) =>
+      if (c > 0L) {
+        val x = cx((k >>> 32).toInt)
+        val y = cy((k & 0xffffffffL).toInt)
+        val pxy = c / nd
+        mi += pxy * math.log(pxy / ((x / nd) * (y / nd)))
+        s += c.toDouble * c.toDouble / (x.toDouble * y.toDouble)
+      }
+    }
+    (mi, nd * s - nd, n)
   }
 
   /** MI from a dense contingency matrix `m(i)(j) = count(x=i, y=j)`. */
@@ -79,8 +115,12 @@ object MutualInformation {
     while (i < n) {
       val av = da(i); val bv = db(i)
       if (av != 0.0 || bv != 0.0) {
-        val ia = dictA.getOrInsert(java.lang.Double.doubleToLongBits(av))
-        val ib = dictB.getOrInsert(java.lang.Double.doubleToLongBits(bv))
+        // a ±0.0 paired with a non-zero value is the zero level, keyed 0L
+        // (the bits of 0.0), never the bits of -0.0
+        val ia = dictA.getOrInsert(
+          if (av == 0.0) 0L else java.lang.Double.doubleToLongBits(av))
+        val ib = dictB.getOrInsert(
+          if (bv == 0.0) 0L else java.lang.Double.doubleToLongBits(bv))
         counts.add((ia.toLong << 32) | ib.toLong, 1L)
         touched += 1
       }
@@ -88,28 +128,11 @@ object MutualInformation {
     }
     val zz = n - touched
     if (zz > 0) {
-      val zeroBits = java.lang.Double.doubleToLongBits(0.0)
-      val ia = dictA.getOrInsert(zeroBits)
-      val ib = dictB.getOrInsert(zeroBits)
+      val ia = dictA.getOrInsert(0L)
+      val ib = dictB.getOrInsert(0L)
       counts.add((ia.toLong << 32) | ib.toLong, zz)
     }
-    // marginals, then Σ pxy·ln(pxy/(px·py)) — identical to fromPairCounts
-    val cx = new Array[Long](dictA.size)
-    val cy = new Array[Long](dictB.size)
-    counts.foreachEntry { (k, c) =>
-      cx((k >>> 32).toInt) += c
-      cy((k & 0xffffffffL).toInt) += c
-    }
-    val nd = n.toDouble
-    var mi = 0.0
-    counts.foreachEntry { (k, c) =>
-      if (c > 0L) {
-        val pxy = c / nd
-        mi += pxy * math.log(pxy / ((cx((k >>> 32).toInt) / nd) *
-          (cy((k & 0xffffffffL).toInt) / nd)))
-      }
-    }
-    mi
+    fold(counts, dictA.size, dictB.size)._1
   }
 }
 

@@ -372,4 +372,28 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
       convSparse, "label", "features", num = 3)
     got.map(_._1) shouldBe greedyOracle(labels, sm, 3).map(_._1)
   }
+
+  test("-0.0 is the zero level in all three encodings") {
+    // Columns 0-2 store half of their zeros as -0.0, at rows whose label is
+    // non-zero as often as not; a level split on -0.0 inflates exactly
+    // those columns' MI.
+    val (labels, m) = randomMatrix(seed = 41, rows = 120, cols = 6)
+    val signed = m.zipWithIndex.map { case (row, i) =>
+      row.zipWithIndex.map { case (v, c) =>
+        if (c < 3 && v == 0.0 && i % 2 == 1) -0.0 else v
+      }
+    }
+    val want = greedyOracle(labels, m, 4).map(_._1.toLong)
+    val conv = IterativeFeatureSelection.selectColumns(
+      conventionalDF(labels, signed), "label", "features", num = 4)
+    val vec = IterativeFeatureSelection.selectRows(
+      alternateDF(labels, signed), "id", "features", num = 4,
+      labelsRow = Vectors.dense(labels))
+    val (feat, lab) = blockedDFs(labels, signed, Seq(37, 80))
+    val blk = IterativeFeatureSelection.selectRowsBlocked(
+      feat, "id", "bid", "values", lab, num = 4)
+    conv.map(_._1.toLong) shouldBe want
+    vec.map(_._1) shouldBe want
+    blk.map(_._1) shouldBe want
+  }
 }

@@ -1,6 +1,7 @@
 package graft.feature
 
 import graft.SparkTestBase
+import graft.stats.CellTable
 import org.apache.spark.sql.functions._
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
@@ -9,7 +10,10 @@ import org.scalatest.matchers.should.Matchers
   * matrices — including NULLs, NaN, ±0.0 and heavy ties — the cell
   * counts must equal the Catalyst spelling it replaced
   * (`crossJoin(pairs) → groupBy().count()`), cell for cell. This is the
-  * equivalence the whole ifs_* family rests on after the round-8 rework.
+  * equivalence the whole ifs_* family rests on. The counter emits
+  * per-pair table chunks; [[cellsOf]] re-sums them per (pair, level,
+  * level) with Spark's grouping of ±0.0, the merge the executor-side fold
+  * performs.
   */
 class PairCellCountsSpec extends AnyFlatSpec with Matchers
     with SparkTestBase {
@@ -26,6 +30,30 @@ class PairCellCountsSpec extends AnyFlatSpec with Matchers
           .otherwise(try_element_at(col("f"), col("other") + 1)).as("ov"))
       .groupBy("cand", "other", "cv", "ov")
       .agg(count(lit(1)).as("c"))
+  }
+
+  /** The counter's chunks as (cand, other, cv, ov, c) rows. */
+  private def cellsOf(chunks: org.apache.spark.rdd.RDD[(Long, Array[Long])],
+                      pairs: Seq[(Int, Int)]) = {
+    val negZero = java.lang.Double.doubleToLongBits(-0.0)
+    def level(bits: Long): java.lang.Double =
+      if (bits == CellTable.NullBits) null
+      else java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(bits))
+    val sums = scala.collection.mutable.Map.empty[(Int, Int, Long, Long), Long]
+    chunks.collect().foreach { case (p, t) =>
+      val (cand, other) = pairs(p.toInt)
+      CellTable.foreach(t) { (_, x, y, c) =>
+        val k = (cand, other, if (x == negZero) 0L else x,
+          if (y == negZero) 0L else y)
+        sums(k) = sums.getOrElse(k, 0L) + c
+      }
+    }
+    val rows = sums.toSeq.map { case ((cand, other, x, y), c) =>
+      org.apache.spark.sql.Row(cand, other, level(x), level(y), c)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "cand INT, other INT, cv DOUBLE, ov DOUBLE, c BIGINT"))
   }
 
   private def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
@@ -63,7 +91,8 @@ class PairCellCountsSpec extends AnyFlatSpec with Matchers
         .repartition(5)
       val pairs = (0 until nF).map(i => (i, -1)) ++
         (for (i <- 0 until nF; j <- 0 until i) yield (i, j))
-      val got = canon(IterativeFeatureSelection.pairCellCounts(src, pairs))
+      val got = canon(cellsOf(
+        IterativeFeatureSelection.pairCellCounts(src, pairs), pairs))
       val want = canon(oldSpelling(src, pairs))
       withClue(s"trial $trial (nF=$nF): ") { got shouldBe want }
     }

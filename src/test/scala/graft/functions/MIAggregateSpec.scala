@@ -74,4 +74,33 @@ class MIAggregateSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     xy.distinct.size shouldBe 30
     agg shouldBe expected +- 1e-12
   }
+
+  it should "treat every NaN as one level and ±0.0 as one level" in {
+    val s = spark
+    import s.implicits._
+    // NaN next to 0.0 / -0.0 / 1.0 in x; -0.0 and 0.0 in y. The same data
+    // with NaN relabelled to an unused level (7.0) and -0.0 to 0.0 is the
+    // expected grouping.
+    val x = Seq(Double.NaN, Double.NaN, 1.0, 1.0, Double.NaN, 1.0, 0.0, -0.0,
+      -0.0, Double.NaN, 0.0, 1.0)
+    val y = Seq(0.0, 1.0, -0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 0.0, -0.0, 1.0, 0.0)
+    def relabel(v: Double): Double = if (v.isNaN) 7.0 else v + 0.0
+    val got = x.zip(y).toDF("x", "y").repartition(3)
+      .agg(MIAggregate.mi($"x", $"y")).head().getDouble(0)
+    val want = x.map(relabel).zip(y.map(relabel)).toDF("x", "y")
+      .agg(MIAggregate.mi($"x", $"y")).head().getDouble(0)
+    got shouldBe want +- 1e-12
+    MutualInformation.fromPairCounts(x.zip(y).map { case (a, b) =>
+      (a, b, 1L) }) shouldBe want +- 1e-12
+    // the probe from the NaN-split bug: 0.0566 nats as one level, the
+    // split spelling gave 0.3749
+    val px = Seq(Double.NaN, Double.NaN, 1.0, 1.0, Double.NaN, 1.0)
+    val py = Seq(0.0, 1.0, 0.0, 1.0, 0.0, 1.0)
+    val probe = px.zip(py).toDF("x", "y")
+      .agg(MIAggregate.mi($"x", $"y")).head().getDouble(0)
+    probe shouldBe MutualInformation.fromVectors(
+      org.apache.spark.ml.linalg.Vectors.dense(px.toArray),
+      org.apache.spark.ml.linalg.Vectors.dense(py.toArray)) +- 1e-12
+    probe shouldBe 0.0566 +- 1e-4
+  }
 }
