@@ -92,17 +92,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE: no short spark.cleaner.periodicGC.interval here — a forced
-      // full GC on a large heap pauses 10s+ and would land mid-query;
-      // resetState GCs between queries instead.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: no short spark.cleaner.periodicGC.interval here — a forced
+    // full GC on a large heap pauses 10s+ and would land mid-query;
+    // resetState GCs between queries instead.
+    val spark = Sessions.getOrCreate(Sessions.builder(4))
     // warm_sec accounting (r13 verdict #3): every leg's total line
     // discloses how long its UNTIMED warmScale block took, so the warm
     // scope is visible in the ledger instead of only in the code diff.

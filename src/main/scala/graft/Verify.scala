@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -8,14 +7,20 @@ import java.nio.file.{Files, Paths}
   * took 569 s at sf0.001 — per-gate fixed costs (streaming micro-batch
   * setup, job scheduling latency, a System.gc() between every pair)
   * dominated, and at the driver's sf0.01 gate that growth risked the
-  * harness time budget (CORRECTNESS_r12.json came back empty). Gates are
-  * independent — each uses gate-unique temp-view names, uuid-suffixed
-  * memory sinks, and per-invocation temp dirs, and none mutates session
-  * conf — so waves of them run concurrently on ONE shared session (the
-  * session-keyed fixture caches stay shared), with [[Bench.resetState]]
-  * only at wave barriers where no query is in flight. Shared fixtures
-  * (bucketed tables, graph/text/ifs session caches) are derived up front
-  * so parallel gates never race on a derivation.
+  * harness time budget (CORRECTNESS_r12.json came back empty). Gates use
+  * gate-unique temp-view names, uuid-suffixed memory sinks, and
+  * per-invocation temp dirs, and waves of them run concurrently on ONE
+  * shared session (the session-keyed fixture caches stay shared), with
+  * [[Bench.resetState]] only at wave barriers where no query is in
+  * flight. Shared fixtures (bucketed tables, graph/text/ifs session
+  * caches) are derived up front so parallel gates never race on a
+  * derivation.
+  *
+  * Gates are NOT conf-isolated: the streaming gates in `EventQueries` set
+  * and restore confs on that shared session (`withStatePartitions` for
+  * `spark.sql.shuffle.partitions`, `withConfs` for the state-store
+  * provider), so one gate's restore can land inside a concurrent
+  * sibling's window. ROADMAP direction 2 (gate isolation) tracks the fix.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -26,18 +31,12 @@ object Verify {
     val only = args.drop(2).toSet
     // Correctness dump, not a timing instrument: default to the machine's
     // cores (capped) rather than Bench's measurement-stable 4.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 16).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = Sessions.cpus(
+      math.min(Runtime.getRuntime.availableProcessors, 16))
+    val spark = Sessions.getOrCreate(Sessions.builderFor(cpus)
       // Concurrent gates each submit small jobs; FAIR keeps one heavy
       // gate's stages from head-of-line-blocking every sibling's tasks.
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.scheduler.mode", "FAIR"))
     new java.io.File(outDir).mkdirs()
     // Sorted name order, same as Bench: wave composition (and so the
     // cold-cost path of the session caches) stays fixed as gates are added.
@@ -61,7 +60,7 @@ object Verify {
     val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val timings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
     val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR",
-      math.min(8, cpus.toInt).toString).toInt)
+      math.min(8, cpus).toString).toInt)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     try {
       selected.grouped(par * 4).foreach { wave =>

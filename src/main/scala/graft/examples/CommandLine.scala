@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.Sessions
 import graft.feature.{FeatureSelector, RowSelector}
 import graft.util.Gen
 import org.apache.spark.ml.feature.VectorAssembler
@@ -131,13 +132,7 @@ object CommandLine {
 
   private def select(cmd: SelectCmd): Unit = {
     val k = cmd.numFeatures
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate(Sessions.builder(4))
 
     // conventional: col _c0 is the label, the rest are features
     val conv = cmd.file.map { path =>

@@ -1,9 +1,10 @@
 package graft.examples
 
+import graft.Sessions
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 import graft.queries.Q
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool: measures every approximate operator's quality contract
   * (recall vs an exact baseline, sketch error bounds) at a given scale
@@ -13,14 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object ContractProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.getOrCreate(Sessions.builder(4))
 
     def pct(n: Long, d: Long): String =
       if (d == 0) "n/a (0 truth)" else f"${n * 100.0 / d}%.1f%% ($n/$d)"

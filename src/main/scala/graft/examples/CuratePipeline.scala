@@ -1,9 +1,10 @@
 package graft.examples
 
+import graft.Sessions
 import graft.ops.{Dedup, TextAnalysis}
 import graft.queries.Q
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end corpus curation — the composed-library story in one
   * program: the operator families the registry gates individually,
@@ -69,14 +70,7 @@ object CuratePipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate(Sessions.builder(4))
 
     val docs = Q.t(spark, sfDir, "documents")
     val n0 = docs.count()

@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.Sessions
 import graft.feature.{FeatureSelector, RowSelector}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.{Vector, Vectors}
@@ -34,13 +35,7 @@ object SelectExample {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val k = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-select-example")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate(Sessions.builder(4))
 
     val df = discretizedLineitem(spark, sfDir).cache()
     val featureCols = Array("c0", "c1", "c2", "c3", "c4", "c5")

@@ -374,9 +374,15 @@ object IterativeFeatureSelection {
         col(valuesCol).cast("array<double>").as("ys"))
     // Round 0: MI(feature, label) for every feature, one job. `n` rides
     // along to enforce the tiling contract: every feature must cover
-    // exactly the label's instance count.
-    val nInstances = labels
-      .agg(sum(size(col("ys")))).head().getLong(0)
+    // exactly the label's instance count. The same aggregate counts the
+    // label blocks, so an empty tiling (e.g. a wrong label row id) fails
+    // by name instead of as a null sum.
+    val labelStats = labels
+      .agg(count(lit(1)), sum(size(col("ys")))).head()
+    require(labelStats.getLong(0) > 0,
+      "blocked alternate encoding: the label tiling is empty (no label " +
+        "blocks — check the label row id)")
+    val nInstances = labelStats.getLong(1)
     // Tiling contract, stray-block direction: the inner join below
     // silently DROPS any feature block whose bid is absent from the
     // label tiling, and the n == nInstances coverage check cannot see

@@ -180,12 +180,9 @@ class RowSelector(override val uid: String)
     val selected: Seq[(Long, Double)] =
       if (isBlockedLayout(dataset.schema)) {
         val df = dataset.toDF()
+        // No label row is selectRowsBlocked's empty-tiling error.
         val labels = df.filter(col($(idCol)) === $(labelRowId))
           .select(col($(blockCol)), col($(featuresCol)))
-        require(!labels.isEmpty,
-          s"blocked layout: no label row with ${$(idCol)} = " +
-            s"${$(labelRowId)} (set labelRowId to the pseudo-feature id " +
-            "carrying the label blocks)")
         IterativeFeatureSelection.selectRowsBlocked(
           df.filter(col($(idCol)) =!= $(labelRowId)),
           $(idCol), $(blockCol), $(featuresCol), labels, $(numTopRows))

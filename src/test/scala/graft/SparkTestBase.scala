@@ -11,17 +11,9 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkTestBase {
-  // One session per JVM (sbt forks one test JVM); small shuffle partition
-  // count keeps the tiny-data tests fast.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // One session per JVM (sbt forks one test JVM); pinned at 4 cores
+  // whatever SPARK_GRAFT_CPUS says — the small shuffle partition count
+  // keeps the tiny-data tests fast.
+  lazy val session: SparkSession =
+    Sessions.getOrCreate(Sessions.builderFor(4))
 }

@@ -256,6 +256,28 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
       m.contains("feature 2") && m.contains("values array is null")))
   }
 
+  test("an empty label tiling is a named IllegalArgumentException, not " +
+    "an NPE, in selectRowsBlocked and a blocked RowSelector fit") {
+    val (labels, m) = randomMatrix(seed = 41, rows = 40, cols = 3)
+    val (feat, lab) = blockedDFs(labels, m, Seq(20))
+    val ex1 = intercept[IllegalArgumentException] {
+      IterativeFeatureSelection.selectRowsBlocked(
+        feat, "id", "bid", "values", lab.limit(0), num = 2)
+    }
+    ex1.getMessage should include("label tiling is empty")
+    import org.apache.spark.sql.functions.lit
+    val withLabelRow = feat.unionByName(
+      lab.withColumn("id", lit(-1L)))
+    val ex2 = intercept[IllegalArgumentException] {
+      new RowSelector()
+        .setNumTopRows(2).setEncoding("blocked").setIdCol("id")
+        .setBlockCol("bid").setFeaturesCol("values")
+        .setLabelRowId(-99L) // the label pseudo-row is id -1
+        .fit(withLabelRow)
+    }
+    ex2.getMessage should include("label tiling is empty")
+  }
+
   test("pairChi2Multi matches a naive driver-side chi-square") {
     val (labels, m) = randomMatrix(seed = 17, rows = 150, cols = 5)
     import spark.implicits._
