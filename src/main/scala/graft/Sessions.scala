@@ -11,23 +11,26 @@ import org.apache.spark.sql.SparkSession
   * val spark = Sessions.getOrCreate(Sessions.builder(defaultCpus = 4))
   * }}}
   *
-  * A `spark.master` already in `new SparkConf()` (the one `spark-submit
-  * --master` puts in system properties) is left alone: a builder-set
-  * master takes precedence over it and would silently turn a cluster
-  * launch into a local one.
+  * A key already in `new SparkConf()` (where `spark-submit --master` and
+  * `--conf` put theirs, as system properties) is left alone: a
+  * builder-set conf takes precedence over it, and would silently turn a
+  * cluster launch into a local one or override the submitter's shuffle
+  * width. The session time zone is the exception: it is always UTC,
+  * because `Q.normalizeEventTs` reads naive timestamps in the session
+  * zone and the gates' answers must match the DuckDB oracle's.
   */
 object Sessions {
 
-  /** The confs a builder gets for `cpus` cores when `presetMaster` is
-    * what `new SparkConf()` already carries.
+  /** The confs a builder gets for `cpus` cores when `preset` holds the
+    * keys `new SparkConf()` already carries: the UTC time zone, and each
+    * default whose key is not preset.
     */
-  def settings(cpus: Int, presetMaster: Option[String])
+  def settings(cpus: Int, preset: String => Boolean)
       : Seq[(String, String)] =
-    presetMaster.fold(Seq("spark.master" -> s"local[$cpus]"))(_ => Nil) ++
-      Seq(
-        "spark.sql.shuffle.partitions" -> cpus.toString,
-        "spark.sql.session.timeZone" -> "UTC",
-        "spark.ui.enabled" -> "false")
+    ("spark.sql.session.timeZone" -> "UTC") +: Seq(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.ui.enabled" -> "false").filterNot { case (k, _) => preset(k) }
 
   /** `SPARK_GRAFT_CPUS`, or `default` when it is unset. */
   def cpus(default: Int): Int =
@@ -42,7 +45,7 @@ object Sessions {
     */
   def builderFor(cpus: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
-    settings(cpus, new SparkConf().getOption("spark.master"))
+    settings(cpus, new SparkConf().contains _)
       .foreach { case (k, v) => b.config(k, v) }
     b
   }

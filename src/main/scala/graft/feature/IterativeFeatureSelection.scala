@@ -2,10 +2,13 @@ package graft.feature
 
 import graft.stats.{CellTable, MRMR, MutualInformation, RowMRMR, RowScore,
   SelectionScore}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -24,24 +27,22 @@ case class RowCandidate(id: Long, vec: Vector, rel: Double, redSum: Double)
   * (`reference:src/main/scala/ifs/ml/feature/IterativeFeatureSelection.scala`)
   * in idiomatic Spark SQL. Differences are physical, never semantic:
   *
-  *   - Pair counting (reference `:65-97`, an RDD `mapPartitions` +
-  *     `countByValue` that collects every distinct tuple to the driver)
-  *     becomes a per-partition primitive contingency map
-  *     ([[pairCellCounts]] — one InternalRow-level pass, no row
-  *     expansion) whose per-pair table chunks merge in ONE `reduceByKey`
-  *     and fold to MI on the executors ([[graft.stats.CellTable.foldByKey]]):
-  *     one job per counting call. Only one MI value per (candidate, other)
-  *     pair ever reaches the driver, so driver memory is O(features), not
-  *     O(features · levels²) — the property that lets this run against
-  *     100 TB inputs.
+  *   - Pair counting (reference `:65-97`, an RDD `countByValue` that
+  *     collects every distinct tuple to the driver) becomes per-partition
+  *     contingency tables ([[pairCellCounts]]) merged in ONE `reduceByKey`
+  *     and folded to MI on the executors: one job per counting call, and
+  *     driver memory O(features), not O(features · levels²) — the
+  *     property that lets this run against 100 TB inputs.
   *   - MI terms are memoized across rounds (reference recomputes every round
   *     from scratch, SURVEY.md §2.4 Q5): round 0 computes MI(cand, label)
   *     for every candidate; round r>0 computes only MI(cand, s_{r-1}) against
   *     the newest selected feature. Identical results, k× less work.
   *   - Ties break toward the lowest feature index/id (documented deviation
   *     from the reference's hash-order ties, SURVEY.md §2.4 Q1).
-  *   - The alternate path caches its input and fetches the winner in the
-  *     same job (reference re-scans the source 3× per round, `:151-185`).
+  *   - The alternate encodings run about one job per round (reference
+  *     re-scans the source 3× per round, `:151-185`): the vector path
+  *     caches its candidates, and the blocked path shuffles the matrix
+  *     once, in slices of each block.
   *   - Alternate-encoding ids stay Long end-to-end (fixes the reference's
   *     Int truncation, SURVEY.md §2.4 Q6).
   */
@@ -58,15 +59,11 @@ object IterativeFeatureSelection {
   val DefaultBatchSize = 1000
 
   /** Max instance count (= per-feature vector width) accepted by the
-    * alternate encoding. The row layout stores EVERY instance's value in
-    * one record per feature (the reference's own alternate input
-    * contract, SURVEY.md §1.1), so per-record memory grows linearly with
-    * the dataset: 10M instances ≈ 80 MB per feature vector — near the
-    * practical ceiling for a single record plus its broadcast label twin.
-    * Beyond that the encoding is the wrong tool (use [[selectColumns]],
-    * whose memory is O(levels), not O(instances)); the guard turns the
-    * otherwise-certain executor OOM into one clear driver-side error,
-    * mirroring the maxCategories pattern.
+    * vector alternate encoding, whose records hold EVERY instance's value
+    * (SURVEY.md §1.1): 10M instances ≈ 80 MB per feature vector, near the
+    * ceiling for one record plus its broadcast label twin. The guard turns
+    * the otherwise-certain executor OOM into one driver-side error, as
+    * maxCategories does.
     */
   val DefaultMaxInstances = 10000000
 
@@ -142,23 +139,15 @@ object IterativeFeatureSelection {
     pairMIMulti(data, batch.map(c => (c, other)), maxCategories)
       .map { case ((c, _), v) => c -> v }
 
-  /** Session-lifetime statistics cache for [[pairStats]]: MI and chi2
-    * depend only on the input RELATION and the column pair, so each pair's
-    * fused (mi, chi2, lx, ly, n) tuple is cached individually under the
-    * canonicalized logical plan (Catalyst's own same-result identity — the
-    * key two equivalent `.select` chains share, and two different parquet
-    * dirs never do) — the shared [[graft.ops.PlanKey]] file-identity key,
-    * absent when the plan does not identify the contents (see its
-    * scaladoc for the staleness/collision analysis). Per-PAIR granularity
-    * means any later request is served for its cached subset and pays
-    * one counting job for only the missing pairs — sound because
-    * [[pairStatsFused]] rounds to 12 decimals exactly so that batch
-    * composition cannot change a pair's value. A feature-statistics cache
-    * in the CBO tradition, NOT cached data: a fit over a matrix another
-    * query already profiled (the Estimator gate re-fitting what
-    * `selectTopK` just selected, a chi2 relevance query after an MI
-    * profile) repeats no corpus-scale counting, and cached hits still
-    * derive dof / Cramér's V without a job.
+  /** Session-lifetime statistics cache for [[pairStats]]: each pair's
+    * fused (mi, chi2, lx, ly, n) tuple, keyed by the input relation's
+    * [[graft.ops.PlanKey]] (absent when the plan does not identify the
+    * contents; see its scaladoc for staleness and collisions) and the
+    * pair. A later request pays one counting job for its uncached pairs
+    * only — sound because [[pairStatsFused]] rounds to 12 decimals, so
+    * batch composition cannot change a value. Statistics, not cached
+    * data: a fit over a matrix another query already profiled (a chi2
+    * query after an MI profile) repeats no corpus-scale counting.
     */
   private val pairStatsCache = scala.collection.concurrent.TrieMap
     .empty[(String, Int), scala.collection.concurrent.TrieMap[(Int, Int),
@@ -166,22 +155,15 @@ object IterativeFeatureSelection {
 
   /** Per-pair contingency tables over one pass of `src`, as
     * (pair index into `pairs`, [[graft.stats.CellTable]] chunk) records —
-    * the counting stage of [[pairStatsFused]], and the CPU-dominant stage
-    * of any profiling call (rows × |pairs| cells).
+    * the CPU-dominant counting stage of [[pairStatsFused]].
     *
-    * Imperative per-partition contingency instead of
-    * `crossJoin(pairs) → groupBy().count()`: the Catalyst spelling pays
-    * an UnsafeRow projection + hash-probe per expanded tuple (~4× the
-    * cost of an array probe, measured end-to-end); here each input row is
-    * read ONCE at the InternalRow level (no boxing, no row expansion) and
-    * counted into a [[graft.stats.CellCounter]] keyed (pairIdx, cvBits,
-    * ovBits), whose flush-on-full bounds memory. NULL values (and
-    * positions past a short array) count as their own level, so NaN dedup
-    * and null-as-group-key semantics match the SQL spelling.
-    *
-    * Emitted chunks ≈ partitions × |pairs| tables of ≤ levels² cells
-    * (plus one set per extra flush) — the same post-combine bound as a
-    * hash aggregate's partial side.
+    * Each input row is read ONCE at the InternalRow level (no boxing, no
+    * row expansion) into a [[graft.stats.CellCounter]] keyed (pairIdx,
+    * cvBits, ovBits), whose flush-on-full bounds memory; the Catalyst
+    * spelling `crossJoin(pairs) → groupBy().count()` measured ~4× slower.
+    * NULL values (and positions past a short array) count as their own
+    * level, as a SQL group key would. Emitted chunks ≈ partitions ×
+    * |pairs| tables of ≤ levels² cells per flush.
     */
   private[graft] def pairCellCounts(src: DataFrame, pairs: Seq[(Int, Int)])
   : RDD[(Long, Array[Long])] = {
@@ -211,30 +193,22 @@ object IterativeFeatureSelection {
 
   private def round12(v: Double): Double = math.rint(v * 1e12) / 1e12
 
-  /** One FUSED counting pass (guide §1.2 "don't compute things twice"):
-    * [[pairCellCounts]] → one `reduceByKey` of the per-pair tables → one
-    * executor-side fold per pair ([[graft.stats.CellTable.foldByKey]]),
-    * which yields MI and chi2 from the same merged table and marginals.
-    * Computing BOTH statistics per pass costs ~nothing on top of the
-    * counting stage (which dominates at any scale), and [[pairStats]]
-    * caches both, so whichever family runs second (chi2 relevance after
-    * an MI profile, or vice versa) pays zero counting jobs instead of
-    * re-scanning the corpus. One job; the driver receives |pairs| scalar
-    * tuples, and both values round to 12 decimals.
+  /** One FUSED counting job: [[pairCellCounts]] → one `reduceByKey` of
+    * the per-pair tables → one executor-side fold per pair
+    * ([[graft.stats.CellTable.foldByKey]]) yielding MI and chi2 from the
+    * same table, at ~no cost over counting alone, so whichever family runs
+    * second is served by [[pairStats]]' cache. The driver receives |pairs|
+    * scalar tuples; both values round to 12 decimals.
     *
     * @return per pair: (mi, chi2, lx, ly, n)
     */
   private def pairStatsFused(data: DataFrame, pairs: Seq[(Int, Int)],
                              maxCategories: Int)
   : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
-    // The cell counter below reads each input row ×|pairs| and is the
-    // CPU-bound stage of the whole selection — its parallelism must not be
-    // whatever split count the scan happened to produce (a small input is
-    // one parquet split → all row × pair tuples are counted on ONE core;
-    // measured 5s versus 0.7s spread over the machine). One narrow
-    // pre-count shuffle of (label, f) rows is orders of magnitude
-    // cheaper. On a real multi-TB input the scan already has ≥ cores
-    // splits and this is a no-op.
+    // The CPU-bound counting stage must not run at whatever split count
+    // the scan produced: a small input is one parquet split, counted on
+    // ONE core (measured 5 s versus 0.7 s spread over the machine). A
+    // multi-TB scan already has ≥ cores splits and skips this shuffle.
     val par = data.sparkSession.sparkContext.defaultParallelism
     val src =
       if (data.rdd.getNumPartitions < par) data.repartition(par) else data
@@ -245,15 +219,12 @@ object IterativeFeatureSelection {
         s"column ${ps(p.toInt)._1} has $levels distinct values, " +
           s"more than maxCategories = $maxCategories")
     }
-    // Round to 12 decimals: the fold's summation order follows the merged
-    // table's layout, which varies with which OTHER pairs share the job
-    // (all-pairs fast path vs per-round batches) and with partitioning,
-    // drifting results by ~1e-15 — enough to flip the greedy argmax on
-    // mathematically-tied scores, making the SELECTED SET depend on the
-    // batchSize perf knob. 12 decimals is far above the drift and far
-    // below any real MI gap, so both paths (and repeated runs) see
-    // bit-identical memo values. (MI ≤ ln(levels), so the scaled value is
-    // well inside exact double range.)
+    // Round to 12 decimals: the fold's summation order varies with which
+    // OTHER pairs share the job and with partitioning, drifting results
+    // by ~1e-15 — enough to flip the argmax on mathematically-tied scores
+    // and make the SELECTED SET depend on batchSize. 12 decimals is far
+    // above the drift and below any real MI gap (MI ≤ ln(levels), well
+    // inside exact double range), so every path sees identical values.
     folded.map { case (p, (mi, chi2, lx, ly, n)) =>
       ps(p.toInt) -> ((round12(mi), round12(chi2), lx, ly, n))
     }.toMap
@@ -289,15 +260,10 @@ object IterativeFeatureSelection {
   : Map[(Int, Int), Double] =
     pairStats(data, allPairs, maxCategories).map { case (p, s) => p -> s._1 }
 
-  /** One distributed job: Pearson chi-square statistic for an arbitrary
-    * list of (cand, other) column pairs (`other == -1` is the label
-    * column) — the classic univariate alternative to MI relevance
-    * (sklearn's chi2 / SelectKBest shape). Same physical plan as
-    * [[pairMIMulti]], the same fused pass: per-partition cell counter
-    * ([[pairCellCounts]]) → one `reduceByKey` of the per-pair tables →
-    * one executor-side fold per pair; the driver receives |pairs|
-    * scalars, never a contingency matrix, so the 100 TB contract is
-    * identical.
+  /** One distributed job (none when every pair is cached): Pearson
+    * chi-square for an arbitrary list of (cand, other) column pairs
+    * (`other == -1` is the label column) — sklearn's chi2 / SelectKBest
+    * shape — from the same fused pass as [[pairMIMulti]].
     *
     * @return per pair: (chi2, distinct levels of cand, distinct levels of
     *         other, total count n) — enough for the caller to derive
@@ -322,25 +288,24 @@ object IterativeFeatureSelection {
     * instance axis either.
     *
     * Blocking contract: for every feature, the set of blockIds must equal
-    * the label's, and a feature block must have exactly the label block's
-    * length — position i of a feature block pairs with position i of the
-    * label block (MI is instance-order invariant, so ANY consistent tiling
-    * works; a scan-partition tiling needs no sort at all). Violations
-    * raise with the offending blockId rather than silently computing MI
-    * over a subset.
+    * the label's, the label tiling holds each blockId once, and a feature
+    * block must have exactly the label block's length — position i of a
+    * feature block pairs with position i of the label block (MI is
+    * instance-order invariant, so ANY consistent tiling works; a
+    * scan-partition tiling needs no sort at all). Violations raise with
+    * the offending id or blockId rather than silently computing MI over a
+    * subset.
     *
-    * Physical plan per selection: round 0 joins the blocked matrix with
-    * the label blocks on blockId, every later round joins the remaining
-    * candidates with the NEWEST WINNER's blocks (a 1/features fraction of
-    * the data — the join's build side), then a per-partition contingency
-    * pass (the same [[graft.stats.CellCounter]] as [[pairCellCounts]]: one
-    * InternalRow-level read per value, no row expansion, flush-on-full
-    * bound) whose per-feature tables merge in ONE `reduceByKey` and fold
-    * to MI on the executors ([[blockMIPerId]]). The driver receives
-    * O(features) doubles per round — never a vector, never a contingency
-    * matrix. Same math as [[MutualInformation.fromVectors]] (the dense
-    * zero cells it infers are counted explicitly here — identical result),
-    * same memoized-redundancy greedy loop, same (score desc, id asc) ties.
+    * Physical plan per selection: feature and label blocks are cut into
+    * slices of [[SliceWidth]] instances and shuffled ONCE, each
+    * (blockId, slice) to one partition, and each round is one job over
+    * that shuffle's output ([[blockedRound]]). Slices of one block land on
+    * different partitions, so a round counts on all cores even when the
+    * matrix is one block. The driver receives O(features) doubles per
+    * round — never a vector, never a contingency matrix. Same math as
+    * [[MutualInformation.fromVectors]] (the dense zero cells it infers are
+    * counted explicitly here — identical result), same memoized-redundancy
+    * greedy loop, same (score desc, id asc) ties.
     *
     * @param blocks      blocked matrix: idCol (feature id, integral),
     *                    blockCol (block id, integral), valuesCol
@@ -352,60 +317,77 @@ object IterativeFeatureSelection {
     */
   def selectRowsBlocked(blocks: DataFrame, idCol: String, blockCol: String,
                         valuesCol: String, labelBlocks: DataFrame,
-                        num: Int): Seq[(Long, Double)] = {
-    // NO operator-level materialization (r13, the sf10 lesson): the
-    // caller's blocks frame is already a cheap re-readable source (the
-    // gates pass the session-pinned fixture), and EVERY second copy of
-    // a multi-GB array-row matrix on the default heap proved fatal in a
-    // different way — .cache()'s in-memory-columnar builder buffers 10k
-    // multi-MB rows per ColumnBuilder batch, and Dataset.checkpoint's
-    // row-copy loop allocates row-sized transients outside the memory
-    // manager while the pinned fixture already holds the storage
-    // budget. The k selection rounds instead re-join lazily against
-    // the source: each round is one spill-safe shuffle of (a shrinking
-    // candidate subset of) the matrix — managed memory only, no second
-    // residency, and the relative cost at gate scales is noise.
-    val data = blocks.select(
-        col(idCol).cast(LongType).as("id"),
-        col(blockCol).cast(LongType).as("bid"),
-        col(valuesCol).cast("array<double>").as("xs"))
-    val labels = labelBlocks.select(
-        col(blockCol).cast(LongType).as("bid"),
-        col(valuesCol).cast("array<double>").as("ys"))
-    // Round 0: MI(feature, label) for every feature, one job. `n` rides
-    // along to enforce the tiling contract: every feature must cover
-    // exactly the label's instance count. The same aggregate counts the
-    // label blocks, so an empty tiling (e.g. a wrong label row id) fails
-    // by name instead of as a null sum.
-    val labelStats = labels
-      .agg(count(lit(1)), sum(size(col("ys")))).head()
-    require(labelStats.getLong(0) > 0,
+                        num: Int): Seq[(Long, Double)] =
+    selectRowsBlocked(blocks, idCol, blockCol, valuesCol, labelBlocks, num,
+      SliceWidth)
+
+  /** Instances per shuffled slice of a block in [[selectRowsBlocked]]:
+    * 8 KB of values, so the slice's row header is noise, while a 10,000
+    * instance matrix still spreads over 10 slices.
+    */
+  private[feature] final val SliceWidth = 1024
+
+  private[feature] def selectRowsBlocked(blocks: DataFrame, idCol: String,
+                                         blockCol: String, valuesCol: String,
+                                         labelBlocks: DataFrame, num: Int,
+                                         sliceWidth: Int)
+  : Seq[(Long, Double)] = {
+    // NO second heap residency of the matrix (r13, the sf10 lesson):
+    // .cache()'s columnar builder buffers 10k multi-MB rows per batch, and
+    // Dataset.checkpoint's row copies allocate outside the memory manager
+    // while the caller's pinned fixture holds the storage budget. The one
+    // copy here is the slice shuffle's output, in shuffle files on disk,
+    // re-read by every round. Rows are (label?, id, bid, slice, block
+    // length, values[slice]): the label blocks reserve no feature id, and
+    // a null or empty block is one slice, so round 0 still checks it.
+    val values = col(valuesCol).cast("array<double>")
+    def sliced(df: DataFrame, label: Boolean, id: Column) = df
+      .select(lit(label).as("l"), id.cast(LongType).as("id"),
+        col(blockCol).cast(LongType).as("bid"), values.as("v"),
+        explode(when(values.isNull || size(values) === 0, array(lit(0)))
+          .otherwise(sequence(lit(0),
+            floor((size(values) - 1) / sliceWidth).cast("int")))).as("s"))
+      .select(col("l"), col("id"), col("bid"), col("s"),
+        when(col("v").isNull, lit(0)).otherwise(size(col("v"))),
+        slice(col("v"), col("s") * sliceWidth + 1, lit(sliceWidth)))
+    val parts = blocks.sparkSession.sparkContext.defaultParallelism
+    val bySlice = sliced(blocks, label = false, col(idCol))
+      .union(sliced(labelBlocks, label = true, lit(0L)))
+      .queryExecution.toRdd
+      .map { r =>
+        require(!r.isNullAt(1) && !r.isNullAt(2),
+          "blocked alternate encoding: a block has a null id or block id")
+        // consecutive slices of a block on consecutive partitions
+        (Math.floorMod(r.getLong(2) + r.getInt(3), parts.toLong).toInt,
+          r.copy())
+      }
+      .partitionBy(new HashPartitioner(parts))
+    // Round 0: MI(feature, label) for every feature, and the tiling
+    // report. An empty label tiling (e.g. a wrong label row id) makes
+    // every feature block look stray, so it is named first.
+    val (relRows, report) = blockedRound(bySlice, None, Set.empty)
+    var labelBlockCount = 0L
+    var nInstances = 0L
+    val strays = mutable.ArrayBuffer.empty[(Long, Long)]
+    report.foreach(t => CellTable.foreach(t) { (what, x, y, _) =>
+      if (what == LabelCell) { labelBlockCount += 1; nInstances += y }
+      else strays += ((x, y))
+    })
+    require(labelBlockCount > 0,
       "blocked alternate encoding: the label tiling is empty (no label " +
         "blocks — check the label row id)")
-    val nInstances = labelStats.getLong(1)
-    // Tiling contract, stray-block direction: the inner join below
-    // silently DROPS any feature block whose bid is absent from the
-    // label tiling, and the n == nInstances coverage check cannot see
-    // that (the matched blocks still cover exactly the label's
-    // instances) — MI would be computed over a subset of the feature's
-    // data without raising. One anti-join against the label bids (a
-    // broadcast-sized side) catches it before any MI is computed.
-    val stray = data.join(labels.select(col("bid")), Seq("bid"),
-        "left_anti")
-      .select(col("id"), col("bid")).limit(1).collect()
-    stray.headOption.foreach { r =>
+    strays.minOption.foreach { case (id, bid) =>
       throw new IllegalArgumentException(
-        s"blocked alternate encoding: feature ${r.getLong(0)} carries " +
-          s"stray block ${r.getLong(1)} absent from the label tiling — " +
-          "feature and label tilings must be identical")
+        s"blocked alternate encoding: feature $id carries stray block " +
+          s"$bid absent from the label tiling — feature and label " +
+          "tilings must be identical")
     }
-    val relRows = blockMIPerId(data.join(labels, "bid"))
     relRows.foreach { case (id, (_, n)) =>
       require(n == nInstances,
         s"blocked alternate encoding: feature $id covers $n instances " +
           s"but the label row has $nInstances — missing or ragged blocks")
     }
-    val rel = relRows.map { case (id, (mi, _)) => id -> mi }
+    val rel = relRows.map { case (id, (mi, _)) => id -> mi }.toMap
     val k = math.min(num.toLong, rel.size.toLong).toInt
     val redSum = mutable.Map.empty[Long, Double].withDefaultValue(0.0)
     val selected = mutable.ArrayBuffer.empty[(Long, Double)]
@@ -420,59 +402,101 @@ object IterativeFeatureSelection {
       remaining -= wid
       if (selected.size < k) {
         // MI(candidate, winner) for every remaining candidate: the
-        // winner's blocks re-keyed as the "label" side of the same fold.
-        val winner = data.filter(col("id") === wid)
-          .select(col("bid"), col("xs").as("ys"))
-        val cands = data.filter(col("id") =!= wid &&
-          !col("id").isin(selected.map(_._1).toSeq: _*))
-        blockMIPerId(cands.join(winner, "bid")).foreach {
-          case (id, (mi, _)) => redSum(id) = redSum(id) + mi
-        }
+        // winner's slices are the side of the same counting pass.
+        blockedRound(bySlice, Some(wid), selected.map(_._1).toSet)._1
+          .foreach { case (id, (mi, _)) => redSum(id) = redSum(id) + mi }
       }
     }
     selected.toSeq
   }
 
-  /** MI per feature id over joined (id, xs, ys) block records — the
-    * blocked path's counting + fold stage. Per partition, a
-    * [[graft.stats.CellCounter]] counts (id, xBits, yBits) cells in one
-    * InternalRow-level pass, NULL counted as a level exactly as in
-    * [[pairCellCounts]]; the per-id tables merge in one `reduceByKey` and
-    * fold on the executors ([[graft.stats.CellTable.foldByKey]]), one job.
-    * Returns 12-decimal-rounded MI (same stabilization rationale as
-    * [[pairStatsFused]]) plus the instance count n for the caller's tiling
-    * check.
+  // Cells of the blocked round-0 tiling report: (LabelCell, bid, length)
+  // per label block, (StrayCell, id, bid) per stray feature block.
+  private final val LabelCell = 0L
+  private final val StrayCell = 1L
+
+  /** One selection round of [[selectRowsBlocked]], one job over the slice
+    * shuffle `bySlice`. Per partition, a first pass keeps the SIDE slices
+    * by (bid, slice) — the label's (`winner` = None) or the winner's, a
+    * 1/features fraction of the partition — and a second counts the
+    * (id, xBits, yBits) cells of every feature outside `skip` against
+    * them, NULL counted as a level exactly as in [[pairCellCounts]]. The
+    * per-id tables merge in one `reduceByKey` and fold on the executors.
+    * Returns 12-decimal-rounded MI (as in [[pairStatsFused]]) and n per
+    * id, and in round 0 the tiling report, tables keyed None. A repeated
+    * side block, a null array or a block length mismatch raises here.
     */
-  private[graft] def blockMIPerId(joined: DataFrame)
-  : Map[Long, (Double, Long)] = {
-    val chunks = joined
-      .select(col("id"), col("xs"), col("ys"))
-      .queryExecution.toRdd
-      .mapPartitions(CellTable.countPartition(_, "blocked") { (row, counter) =>
-        val id = row.getLong(0)
-        if (row.isNullAt(1) || row.isNullAt(2))
-          throw new IllegalArgumentException(
-            s"blocked alternate encoding: feature $id has a block whose " +
-              "feature or label values array is null — feature and label " +
-              "tilings must be identical")
-        val xs = row.getArray(1)
-        val ys = row.getArray(2)
-        val nX = xs.numElements(); val nY = ys.numElements()
-        if (nX != nY) throw new IllegalArgumentException(
-          s"blocked alternate encoding: feature $id has a block of " +
-            s"length $nX where the label block has length $nY — " +
-            "feature and label tilings must be identical")
-        var i = 0
-        while (i < nX) {
-          counter.add(id, CellTable.bitsAt(xs, i), CellTable.bitsAt(ys, i))
-          i += 1
+  private def blockedRound(bySlice: RDD[(Int, InternalRow)],
+                           winner: Option[Long], skip: Set[Long])
+  : (Seq[(Long, (Double, Long))], Seq[Array[Long]]) = {
+    val sideName = winner.fold("the label tiling")(w => s"feature $w")
+    val chunks = bySlice.zipPartitions(bySlice) { (first, second) =>
+      // (bid, slice) → (block length, values[slice])
+      val side = mutable.HashMap.empty[(Long, Int), (Int, ArrayData)]
+      var report = Array.emptyLongArray
+      var strays = 0
+      first.foreach { case (_, r) =>
+        val label = r.getBoolean(0)
+        if (winner.fold(label)(w => !label && r.getLong(1) == w)) {
+          val bid = r.getLong(2)
+          if (side.contains((bid, r.getInt(3))))
+            throw new IllegalArgumentException(
+              s"blocked alternate encoding: $sideName repeats block $bid " +
+                "— feature and label tilings must be identical")
+          side((bid, r.getInt(3))) =
+            (r.getInt(4), if (r.isNullAt(5)) null else r.getArray(5))
+          if (label && r.getInt(3) == 0)
+            report = CellTable.add(report, LabelCell, bid, r.getInt(4), 1L)
         }
-      })
-    // the ids are not known before the job: the merge is as wide as the
-    // default parallelism
-    CellTable.foldByKey(chunks, Int.MaxValue)
-      .map { case (id, (mi, _, _, _, n)) => id -> ((round12(mi), n)) }
-      .toMap
+      }
+      val tables = CellTable.countPartition(second.map(_._2), "blocked") {
+        (r, counter) =>
+          val id = r.getLong(1)
+          val bid = r.getLong(2)
+          if (!r.getBoolean(0) && !skip(id)) side.get((bid, r.getInt(3)))
+          match {
+            case None if winner.isEmpty => // a few strays name the error
+              strays += 1
+              if (strays <= 64)
+                report = CellTable.add(report, StrayCell, id, bid, 1L)
+            case None => throw new IllegalArgumentException(
+              s"blocked alternate encoding: feature $id has block $bid, " +
+                s"which $sideName lacks — missing or ragged blocks")
+            case Some((nY, ys)) =>
+              if (r.isNullAt(5) || ys == null)
+                throw new IllegalArgumentException(
+                  s"blocked alternate encoding: feature $id has a block " +
+                    "whose feature or label values array is null — " +
+                    "feature and label tilings must be identical")
+              val nX = r.getInt(4)
+              if (nX != nY) throw new IllegalArgumentException(
+                s"blocked alternate encoding: feature $id has a block of " +
+                  s"length $nX where the label block has length $nY — " +
+                  "feature and label tilings must be identical")
+              val xs = r.getArray(5)
+              var i = 0
+              while (i < xs.numElements()) {
+                counter.add(id, CellTable.bitsAt(xs, i),
+                  CellTable.bitsAt(ys, i))
+                i += 1
+              }
+          }
+      }
+      tables.map { case (id, t) => (Option(id), t) } ++
+        Iterator((None, report)).filter(_ => CellTable.size(report) > 0)
+    }
+    // NOT preservesPartitioning: the chunks are keyed by id, not by
+    // partition, and a kept partitioner would let reduceByKey skip its
+    // shuffle.
+    chunks.reduceByKey(new HashPartitioner(bySlice.getNumPartitions),
+        CellTable.merge _)
+      .map[Either[(Long, (Double, Long)), Array[Long]]] {
+        case (Some(id), t) =>
+          val (mi, _, _, _, n) = CellTable.foldTable(t)
+          Left(id -> ((round12(mi), n)))
+        case (None, t) => Right(t)
+      }
+      .collect().toSeq.partitionMap(identity)
   }
 
   /** The alternate drivers' argmax: (score desc, id asc). */
@@ -522,7 +546,13 @@ object IterativeFeatureSelection {
   /** Fast path for mRMR: relevance is computed once, and each round folds
     * only MI(candidate, newestSelected) into a running redundancy sum —
     * O(candidates) vector-MI evaluations per round instead of the
-    * reference's O(candidates · |selected|).
+    * reference's O(candidates · |selected|). Each MI term is rounded to
+    * 12 decimals as in [[pairStatsFused]], so tied candidates go to the
+    * lowest id here too, not to floating-point noise. 2k − 1 jobs for k
+    * rounds:
+    * round 0's argmax also counts the candidates (k comes from the same
+    * job), and every later round is the winner's vector fetch plus one
+    * argmax that also materializes the newly cached candidates.
     */
   private def selectRowsIncremental(df: DataFrame, idCol: String,
                                     featuresCol: String, num: Int,
@@ -530,45 +560,45 @@ object IterativeFeatureSelection {
   : Seq[(Long, Double)] = {
     val sc = df.sparkSession.sparkContext
     val bLabels = sc.broadcast(labelsRow)
-    // The per-round loop runs on the RDD API deliberately: each round is a
-    // trivial map + reduce over already-cached candidates, and going
-    // through Dataset/Catalyst here costs a full analyze/optimize/encode
-    // cycle per round on the DRIVER (runtime-reflection encoders included)
-    // — measured as the dominant, high-variance cost of the whole
-    // selection once the JVM is warm with other queries. One DataFrame
-    // plan runs below (the projection into the RDD); everything after is
-    // plain distributed compute with O(1) driver planning per round.
-    var cands: org.apache.spark.rdd.RDD[RowCandidate] = df
+    // The per-round loop runs on the RDD API deliberately: through
+    // Dataset/Catalyst each trivial round costs a full analyze/optimize/
+    // encode cycle on the DRIVER — measured as the dominant, high-variance
+    // cost of the whole selection. One DataFrame plan runs below (the
+    // projection into the RDD); each round after it plans in O(1).
+    var cands: RDD[RowCandidate] = df
       .select(col(idCol).cast(LongType).as("id"), col(featuresCol).as("vec"))
       .rdd
       .map { r =>
         val v = r.getAs[Vector](1)
         RowCandidate(r.getLong(0), v,
-          MutualInformation.fromVectors(v, bLabels.value), 0.0)
+          round12(MutualInformation.fromVectors(v, bLabels.value)), 0.0)
       }.cache()
-    val k = math.min(num.toLong, cands.count()).toInt
+    // (candidates, winner by (score desc, id asc)) in ONE job — only
+    // scalar (id, score) pairs travel, never an instance-length vector.
+    def argmax(rdd: RDD[RowCandidate], sSize: Int) = rdd
+      .map(c => (1L, Option((c.id,
+        if (sSize == 0) c.rel else c.rel - c.redSum / sSize))))
+      .fold((0L, None)) { case ((n1, a), (n2, b)) =>
+        (n1 + n2, (a ++ b).reduceOption(better))
+      }
+    val (total, first) = argmax(cands, 0)
+    var best = first
+    val k = math.min(num.toLong, total).toInt
     val selected = mutable.ArrayBuffer.empty[(Long, Double)]
     while (selected.size < k) {
-      val sSize = selected.size
-      // Winner by (score desc, id asc) in ONE reduce job — only scalar
-      // (id, score) pairs travel; the winning vector is fetched separately
-      // from the cached candidates so instance-length vectors never ride
-      // the argmax.
-      val (wid, wscore) = cands
-        .map(c => (c.id,
-          if (sSize == 0) c.rel else c.rel - c.redSum / sSize))
-        .reduce(better)
+      val (wid, wscore) = best.get
       selected += ((wid, wscore))
       if (selected.size < k) {
-        val winVec = cands.filter(_.id == wid).first().vec
-        val bWin = sc.broadcast(winVec)
+        // one collect job: first() is take(1), which may scan twice
+        val bWin = sc.broadcast(
+          cands.filter(_.id == wid).map(_.vec).collect().head)
         val next = cands
           .filter(_.id != wid)
           .map(c => c.copy(
-            redSum = c.redSum + MutualInformation.fromVectors(c.vec,
-              bWin.value)))
+            redSum = c.redSum + round12(MutualInformation.fromVectors(
+              c.vec, bWin.value))))
           .cache()
-        next.count() // materialize before dropping the parent
+        best = argmax(next, selected.size)._2 // materializes next
         cands.unpersist()
         cands = next
       }

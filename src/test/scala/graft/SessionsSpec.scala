@@ -13,19 +13,31 @@ class SessionsSpec extends AnyFlatSpec with Matchers {
   behavior of "Sessions.settings"
 
   it should "leave a master that is already set alone" in {
-    val s = Sessions.settings(4, Some("spark://host:7077")).toMap
+    val s = Sessions.settings(4, Set("spark.master")).toMap
     s.get("spark.master") shouldBe None
   }
 
   it should "set local[cpus] when no master is set" in {
-    Sessions.settings(6, None).toMap.get("spark.master") shouldBe
-      Some("local[6]")
+    Sessions.settings(6, Set.empty[String]).toMap
+      .get("spark.master") shouldBe Some("local[6]")
   }
 
-  it should "always set shuffle partitions to cpus" in {
-    for (master <- Seq(None, Some("yarn")); cpus <- Seq(1, 4, 16))
-      Sessions.settings(cpus, master).toMap
-        .get("spark.sql.shuffle.partitions") shouldBe Some(cpus.toString)
+  it should "set shuffle partitions to cpus only when absent" in {
+    val key = "spark.sql.shuffle.partitions"
+    for (master <- Seq(Set.empty[String], Set("spark.master"));
+         cpus <- Seq(1, 4, 16)) {
+      Sessions.settings(cpus, master).toMap.get(key) shouldBe
+        Some(cpus.toString)
+      Sessions.settings(cpus, master + key).toMap.get(key) shouldBe None
+    }
+  }
+
+  it should "leave every preset key but the UTC time zone alone" in {
+    val all = Sessions.settings(4, Set.empty[String]).map(_._1)
+    all should contain allOf ("spark.master", "spark.sql.shuffle.partitions",
+      "spark.sql.session.timeZone", "spark.ui.enabled")
+    Sessions.settings(4, all.toSet) shouldBe
+      Seq("spark.sql.session.timeZone" -> "UTC")
   }
 
   behavior of "src/main"

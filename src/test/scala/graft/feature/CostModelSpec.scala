@@ -1,15 +1,18 @@
 package graft.feature
 
 import graft.SparkTestBase
-import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Spark jobs per fit against the reference's cost model (BASELINE.md):
   * the conventional encoding may run at most 1 + k·⌈cols/1000⌉ jobs, one
-  * counting pass per selection round, and the blocked alternate encoding
-  * is pinned at its measured count so a plan change that adds jobs fails
+  * counting pass per selection round; the blocked alternate encoding at
+  * most k + 1 (one job per round over one shuffle of block slices, whose
+  * map stage later rounds skip) and the vector one at most 2k − 1 (an argmax
+  * and a winner fetch per round), so a plan change that adds jobs fails
   * here rather than only in the benchmark.
   */
 class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
@@ -24,34 +27,68 @@ class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
     else ((i * 31 + f * 17) % 5).toDouble
   private def label(i: Int): Double = ((i / 3) % 3).toDouble
 
-  /** Jobs started while `body` runs, counted once the listener bus has
-    * gone quiet.
+  /** Jobs started and stages completed while `body` runs, counted once
+    * the listener bus has gone quiet. A stage whose shuffle output is
+    * reused is skipped and never completes.
     */
-  private def jobsOf[T](body: => T): (T, Int) = {
+  private def jobsOf[T](body: => T): (T, Int, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = jobs.get() }
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    def settled(): (Int, Int) = {
+      var prev = (-1, -1); var cur = (jobs.get(), stages.get())
+      while (cur != prev) {
+        Thread.sleep(200); prev = cur; cur = (jobs.get(), stages.get())
+      }
       cur
     }
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
+      override def onStageCompleted(sc: SparkListenerStageCompleted)
+      : Unit = { stages.incrementAndGet(); () }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
-      (out, settled())
+      val (j, s) = settled()
+      (out, j, s)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The blocked layout of the test matrix, `width` instances per block,
+    * with the label row as id -1.
+    */
+  private def blockedDF(width: Int) = {
+    import spark.implicits._
+    (-1 until cols).flatMap { f =>
+      (0 until rows by width).zipWithIndex.map { case (lo, b) =>
+        (f.toLong, b.toLong, (lo until math.min(lo + width, rows)).map(i =>
+          if (f < 0) label(i) else value(i, f)).toArray)
+      }
+    }.toDF("id", "block", "values")
+  }
+
+  private def vectorDF() = {
+    import spark.implicits._
+    (0 until cols).map { f =>
+      (f.toLong, Vectors.dense(Array.tabulate(rows)(value(_, f))): Vector)
+    }.toDF("id", "features")
+  }
+
+  private def labelVector = Array.tabulate(rows)(label)
+
+  private def fitBlocked(width: Int): Seq[Long] = new RowSelector()
+    .setNumTopRows(k).setEncoding("blocked").setIdCol("id")
+    .setBlockCol("block").setFeaturesCol("values").setLabelRowId(-1L)
+    .fit(blockedDF(width)).selectedRows.toSeq
 
   test("a conventional fit runs at most 1 + k·⌈cols/1000⌉ jobs") {
     import spark.implicits._
     val df = (0 until rows).map { i =>
       (label(i).toInt, Vectors.dense(Array.tabulate(cols)(value(i, _))))
     }.toDF("label", "features")
-    val (selected, jobs) = jobsOf(new FeatureSelector()
+    val (selected, jobs, _) = jobsOf(new FeatureSelector()
       .setNumTopFeatures(k).setLabelCol("label").setFeaturesCol("features")
       .fit(df).selectedFeatures)
     selected.length shouldBe k
@@ -59,18 +96,60 @@ class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
   }
 
   test("a blocked fit runs no more jobs than its pinned count") {
-    import spark.implicits._
-    val df = ((-1 until cols).flatMap { f =>
-      (0 until rows by 64).zipWithIndex.map { case (lo, b) =>
-        (f.toLong, b.toLong, (lo until math.min(lo + 64, rows)).map(i =>
-          if (f < 0) label(i) else value(i, f)).toArray)
-      }
-    }).toDF("id", "block", "values")
-    val (selected, jobs) = jobsOf(new RowSelector()
-      .setNumTopRows(k).setEncoding("blocked").setIdCol("id")
-      .setBlockCol("block").setFeaturesCol("values").setLabelRowId(-1L)
-      .fit(df).selectedRows)
+    val (selected, jobs, stages) = jobsOf(fitBlocked(64))
     selected.length shouldBe k
-    jobs should be <= 11
+    jobs should be <= k + 1
+    // round 0 maps the block shuffle, counts and folds; later rounds
+    // reuse its output and run only their count and fold stages
+    stages should be <= 2 * k + 1
+  }
+
+  test("a vector fit runs at most 2k − 1 jobs") {
+    val (selected, jobs, _) = jobsOf(new RowSelector()
+      .setNumTopRows(k).setEncoding("vector").setIdCol("id")
+      .setFeaturesCol("features").setLabelVector(labelVector)
+      .fit(vectorDF()).selectedRows)
+    selected.length shouldBe k
+    jobs should be <= 2 * k - 1
+  }
+
+  test("blocked fits with more blocks than cores, or one block, match " +
+    "selectRows") {
+    val want = IterativeFeatureSelection.selectRows(vectorDF(), "id",
+      "features", k, Vectors.dense(labelVector))
+    spark.sparkContext.defaultParallelism should be < rows / 13
+    for (width <- Seq(13, rows)) {
+      val df = blockedDF(width)
+      val got = IterativeFeatureSelection.selectRowsBlocked(
+        df.filter("id >= 0"), "id", "block", "values",
+        df.filter("id = -1").select("block", "values"), k)
+      got.map(_._1) shouldBe want.map(_._1)
+      got.zip(want).foreach { case ((_, g), (_, w)) => g shouldBe w +- 1e-9 }
+    }
+  }
+
+  test("a one-block blocked fit counts on every core") {
+    // tasks that read the slice shuffle and write counts, per stage: the
+    // count stages of the rounds
+    val busy = new java.util.concurrent.ConcurrentHashMap[Int, Integer]
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null && m.shuffleReadMetrics.recordsRead > 0 &&
+            m.shuffleWriteMetrics.recordsWritten > 0)
+          busy.merge(te.stageId, 1, (a: Integer, b: Integer) => a + b)
+        ()
+      }
+    }
+    val df = blockedDF(rows)
+    spark.sparkContext.addSparkListener(listener)
+    val (got, _, _) = try jobsOf(IterativeFeatureSelection.selectRowsBlocked(
+      df.filter("id >= 0"), "id", "block", "values",
+      df.filter("id = -1").select("block", "values"), k, sliceWidth = 16))
+    finally spark.sparkContext.removeSparkListener(listener)
+    got.length shouldBe k
+    busy.size should be >= k
+    busy.values.forEach(n =>
+      n.intValue shouldBe spark.sparkContext.defaultParallelism)
   }
 }

@@ -3,6 +3,7 @@ package graft.feature
 import graft.SparkTestBase
 import graft.stats.MutualInformation
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -186,11 +187,13 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
       alternateDF(labels, m), "id", "features", num = 4,
       labelsRow = Vectors.dense(labels))
     // two different tilings (ragged, and near-single-block) must both
-    // reproduce the vector path bit-for-bit at the memo's 12-decimal grain
-    for (cuts <- Seq(Seq(13, 40, 41, 77), Seq(109))) {
+    // reproduce the vector path bit-for-bit at the memo's 12-decimal grain,
+    // whole or cut into shuffle slices of 7 instances
+    for (cuts <- Seq(Seq(13, 40, 41, 77), Seq(109));
+         w <- Seq(IterativeFeatureSelection.SliceWidth, 7)) {
       val (feat, lab) = blockedDFs(labels, m, cuts)
       val got = IterativeFeatureSelection.selectRowsBlocked(
-        feat, "id", "bid", "values", lab, num = 4)
+        feat, "id", "bid", "values", lab, num = 4, w)
       got.map(_._1) shouldBe want.map(_._1)
       got.zip(want).foreach { case ((_, gs), (_, ws)) =>
         gs shouldBe ws +- 1e-9
@@ -209,51 +212,77 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
 
   test("selectRowsBlocked rejects ragged feature/label block mismatches " +
     "instead of computing MI over a subset") {
-    val (labels, m) = randomMatrix(seed = 37, rows = 60, cols = 4)
-    val (feat, lab) = blockedDFs(labels, m, Seq(20, 40))
-    // a feature block shorter than its label block → length error
-    val truncated = feat.withColumn("values",
-      org.apache.spark.sql.functions.expr(
-        "CASE WHEN id = 2 AND bid = 1 THEN slice(values, 1, 5) " +
-          "ELSE values END"))
-    val ex1 = intercept[Exception] {
-      IterativeFeatureSelection.selectRowsBlocked(
-        truncated, "id", "bid", "values", lab, num = 2)
+    // every check holds whole and across shuffle slices of 3 instances
+    for (w <- Seq(IterativeFeatureSelection.SliceWidth, 3)) {
+      def fit(f: DataFrame, l: DataFrame, num: Int) =
+        IterativeFeatureSelection.selectRowsBlocked(f, "id", "bid", "values",
+          l, num, w)
+      val (labels, m) = randomMatrix(seed = 37, rows = 60, cols = 4)
+      val (feat, lab) = blockedDFs(labels, m, Seq(20, 40))
+      // a feature block shorter than its label block → length error
+      val truncated = feat.withColumn("values",
+        org.apache.spark.sql.functions.expr(
+          "CASE WHEN id = 2 AND bid = 1 THEN slice(values, 1, 5) " +
+            "ELSE values END"))
+      val ex1 = intercept[Exception] {
+        fit(truncated, lab, 2)
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(ex1).exists(_.contains("label block has length")))
+      // a label block shorter than its feature blocks → the same error
+      val shortLab = lab.withColumn("values",
+        org.apache.spark.sql.functions.expr(
+          "CASE WHEN bid = 1 THEN slice(values, 1, 5) ELSE values END"))
+      val ex1b = intercept[Exception](fit(feat, shortLab, 2))
+      assert(messages(ex1b).exists(_.contains(
+        "length 20 where the label block has length 5")))
+      // a feature missing one block entirely → coverage error
+      val missing = feat.filter("NOT (id = 1 AND bid = 0)")
+      val ex2 = intercept[Exception] {
+        fit(missing, lab, 2)
+      }
+      assert(messages(ex2).exists(_.contains("missing or ragged blocks")))
+      // a feature carrying an EXTRA block absent from the label tiling:
+      // nothing pairs with it and coverage still matches the label's
+      // instance count, so the stray block itself must raise
+      import spark.implicits._
+      val stray = feat.union(
+        Seq((3L, 99L, Array(1.0, 2.0, 3.0))).toDF("id", "bid", "values"))
+      val ex3 = intercept[Exception] {
+        fit(stray, lab, 2)
+      }
+      assert(messages(ex3).exists(_.contains("stray block")))
+      // the same among 300 one-instance blocks, so the stray's partition
+      // holds many label blocks too
+      val (labels300, m300) = randomMatrix(seed = 43, rows = 300, cols = 2)
+      val (feat300, lab300) = blockedDFs(labels300, m300, 1 until 300)
+      val ex3b = intercept[Exception] {
+        fit(feat300.union(Seq((1L, 999L, Array(1.0))).toDF("id", "bid",
+          "values")), lab300, 1)
+      }
+      assert(messages(ex3b).exists(_.contains("stray block 999")))
+      // a feature block whose values array is null → the same contract
+      // error naming the feature, not an executor NullPointerException
+      val nulled = feat.withColumn("values",
+        org.apache.spark.sql.functions.expr(
+          "CASE WHEN id = 2 AND bid = 1 THEN CAST(NULL AS array<double>) " +
+            "ELSE values END"))
+      val ex4 = intercept[Exception] {
+        fit(nulled, lab, 2)
+      }
+      assert(messages(ex4).exists(m =>
+        m.contains("feature 2") && m.contains("values array is null")))
+      // a label tiling that repeats a block id: each feature block would
+      // pair with both copies and n would still match, so the repeat itself
+      // must raise
+      val ex5 = intercept[Exception] {
+        fit(feat, lab.union(lab.filter("bid = 1")), 2)
+      }
+      assert(messages(ex5).exists(m =>
+        m.contains("label tiling repeats block 1")))
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e =>
-        Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex1).exists(_.contains("label block has length")))
-    // a feature missing one block entirely → coverage error
-    val missing = feat.filter("NOT (id = 1 AND bid = 0)")
-    val ex2 = intercept[Exception] {
-      IterativeFeatureSelection.selectRowsBlocked(
-        missing, "id", "bid", "values", lab, num = 2)
-    }
-    assert(messages(ex2).exists(_.contains("missing or ragged blocks")))
-    // a feature carrying an EXTRA block absent from the label tiling:
-    // the inner join would silently drop it (coverage still matches the
-    // label's instance count), so the stray-block anti-join must raise
-    import spark.implicits._
-    val stray = feat.union(
-      Seq((3L, 99L, Array(1.0, 2.0, 3.0))).toDF("id", "bid", "values"))
-    val ex3 = intercept[Exception] {
-      IterativeFeatureSelection.selectRowsBlocked(
-        stray, "id", "bid", "values", lab, num = 2)
-    }
-    assert(messages(ex3).exists(_.contains("stray block")))
-    // a feature block whose values array is null → the same contract
-    // error naming the feature, not an executor NullPointerException
-    val nulled = feat.withColumn("values",
-      org.apache.spark.sql.functions.expr(
-        "CASE WHEN id = 2 AND bid = 1 THEN CAST(NULL AS array<double>) " +
-          "ELSE values END"))
-    val ex4 = intercept[Exception] {
-      IterativeFeatureSelection.selectRowsBlocked(
-        nulled, "id", "bid", "values", lab, num = 2)
-    }
-    assert(messages(ex4).exists(m =>
-      m.contains("feature 2") && m.contains("values array is null")))
   }
 
   test("an empty label tiling is a named IllegalArgumentException, not " +
