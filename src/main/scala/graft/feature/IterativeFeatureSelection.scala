@@ -1,24 +1,32 @@
 package graft.feature
 
-import graft.stats.{CellTable, MRMR, MutualInformation, RowMRMR, RowScore,
-  SelectionScore}
+import graft.stats.{CellTable, Coded, CodedRows, MRMR, MutualInformation,
+  RowMRMR, RowScore, SelectionScore}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
-/** Candidate state for the alternate (row-wise) encoding: one record per
-  * feature, carrying its value vector across all instances plus the
+/** Candidate state for the vector alternate encoding: one record per
+  * feature, carrying its coded value vector ([[Coded.ofVector]]) plus the
   * incrementally-accumulated mRMR terms.
   */
-case class RowCandidate(id: Long, vec: Vector, rel: Double, redSum: Double)
+private[feature] case class RowCandidate(id: Long, codes: Array[Coded],
+                                         rel: Double, redSum: Double)
+
+/** One slice of a block in [[IterativeFeatureSelection.selectRowsBlocked]]'s
+  * shuffle: instances [s·width, (s+1)·width) of block `bid` of the label
+  * or of feature `id`, coded (null for a null block); `len` is the whole
+  * block's length.
+  */
+private[feature] case class BlockSlice(label: Boolean, id: Long, bid: Long,
+                                       s: Int, len: Int, values: Coded)
 
 /** Greedy iterative feature selection (IFS) with the mRMR criterion, in both
   * physical layouts of the data matrix.
@@ -28,11 +36,13 @@ case class RowCandidate(id: Long, vec: Vector, rel: Double, redSum: Double)
   * in idiomatic Spark SQL. Differences are physical, never semantic:
   *
   *   - Pair counting (reference `:65-97`, an RDD `countByValue` that
-  *     collects every distinct tuple to the driver) becomes per-partition
-  *     contingency tables ([[pairCellCounts]]) merged in ONE `reduceByKey`
-  *     and folded to MI on the executors: one job per counting call, and
-  *     driver memory O(features), not O(features · levels²) — the
-  *     property that lets this run against 100 TB inputs.
+  *     collects every distinct tuple to the driver) codes each column's
+  *     levels once per fit ([[graft.stats.Coded]]) and counts pairs of
+  *     codes into dense per-partition contingency tables
+  *     ([[pairCellCounts]]), merged in ONE `reduceByKey` and folded to MI
+  *     on the executors: one job per counting call, and driver memory
+  *     O(features), not O(features · levels²) — the property that lets
+  *     this run against 100 TB inputs.
   *   - MI terms are memoized across rounds (reference recomputes every round
   *     from scratch, SURVEY.md §2.4 Q5): round 0 computes MI(cand, label)
   *     for every candidate; round r>0 computes only MI(cand, s_{r-1}) against
@@ -83,10 +93,16 @@ object IterativeFeatureSelection {
   : Seq[(Int, Double)] = {
     val data = df.select(
       col(labelCol).cast(DoubleType).as("label"),
-      vector_to_array(col(featuresCol), "float64").as("f")).cache()
+      vector_to_array(col(featuresCol), "float64").as("f"))
+    // Coded once per fit, a quarter of the doubles' size; rounds count it.
+    val coded = codeMatrix(data).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val numCols = data.select(size(col("f"))).head().getInt(0)
+      // The coding job: the widest row is the width, so a short row's
+      // missing positions count as NULL, and an empty input selects none.
+      val numCols = coded.map(_.width).fold(0)(math.max)
       val k = math.min(num, numCols)
+      def mi(pairs: Seq[(Int, Int)]) = pairStats(data, pairs, maxCategories,
+        coded).map { case (p, st) => p -> st._1 }
       // (cand, other) -> MI; other = -1 encodes the label column.
       val memo = mutable.Map.empty[(Int, Int), Double]
       // Narrow-matrix fast path: when the FULL pair table (every candidate
@@ -98,14 +114,13 @@ object IterativeFeatureSelection {
       // (pairs > batchSize) keep the per-round batched jobs — at that shape
       // precomputing all O(cols²) pairs would dwarf the k·cols the greedy
       // rounds actually consume.
-      if (numCols.toLong * (numCols + 1) / 2 <= batchSize) {
+      if (numCols > 0 && numCols.toLong * (numCols + 1) / 2 <= batchSize) {
         val allPairs = (0 until numCols).map(c => (c, -1)) ++
           (for { j <- 0 until numCols; i <- (j + 1) until numCols }
             yield (i, j))
-        pairMIMulti(data, allPairs, maxCategories).foreach {
-          case ((i, j), v) =>
-            memo((i, j)) = v
-            if (j >= 0) memo((j, i)) = v
+        mi(allPairs).foreach { case ((i, j), v) =>
+          memo((i, j)) = v
+          if (j >= 0) memo((j, i)) = v
         }
       }
       val selected = mutable.ArrayBuffer.empty[(Int, Double)]
@@ -115,8 +130,8 @@ object IterativeFeatureSelection {
         val newest = if (selected.isEmpty) -1 else selIdx.last
         val missing = cands.filterNot(c => memo.contains((c, newest)))
         missing.grouped(batchSize).foreach { batch =>
-          pairMI(data, batch, newest, maxCategories).foreach {
-            case (c, mi) => memo((c, newest)) = mi
+          mi(batch.map(c => (c, newest))).foreach {
+            case ((c, _), v) => memo((c, newest)) = v
           }
         }
         val scored = cands.map { c =>
@@ -128,16 +143,8 @@ object IterativeFeatureSelection {
         selected += best
       }
       selected.toSeq
-    } finally { data.unpersist(); () }
+    } finally { coded.unpersist(); () }
   }
-
-  /** One distributed job: MI(cand, other) for every candidate in `batch`.
-    * `other == -1` means the label column. Thin wrapper over [[pairMIMulti]].
-    */
-  private[graft] def pairMI(data: DataFrame, batch: Seq[Int], other: Int,
-                            maxCategories: Int): Map[Int, Double] =
-    pairMIMulti(data, batch.map(c => (c, other)), maxCategories)
-      .map { case ((c, _), v) => c -> v }
 
   /** Session-lifetime statistics cache for [[pairStats]]: each pair's
     * fused (mi, chi2, lx, ly, n) tuple, keyed by the input relation's
@@ -153,42 +160,42 @@ object IterativeFeatureSelection {
     .empty[(String, Int), scala.collection.concurrent.TrieMap[(Int, Int),
       (Double, Double, Long, Long, Long)]]
 
-  /** Per-pair contingency tables over one pass of `src`, as
-    * (pair index into `pairs`, [[graft.stats.CellTable]] chunk) records —
-    * the CPU-dominant counting stage of [[pairStatsFused]].
-    *
-    * Each input row is read ONCE at the InternalRow level (no boxing, no
-    * row expansion) into a [[graft.stats.CellCounter]] keyed (pairIdx,
-    * cvBits, ovBits), whose flush-on-full bounds memory; the Catalyst
-    * spelling `crossJoin(pairs) → groupBy().count()` measured ~4× slower.
-    * NULL values (and positions past a short array) count as their own
-    * level, as a SQL group key would. Emitted chunks ≈ partitions ×
-    * |pairs| tables of ≤ levels² cells per flush.
+  /** The (label, f) matrix `data` as [[graft.stats.CodedRows]] chunks,
+    * coded per partition in one pass. The CPU-bound counting must not run
+    * at whatever split count the scan produced: a small input is one
+    * parquet split, counted on ONE core (measured 5 s versus 0.7 s spread
+    * over the machine), so it is spread first. A multi-TB scan already
+    * has ≥ cores splits and skips this shuffle.
     */
-  private[graft] def pairCellCounts(src: DataFrame, pairs: Seq[(Int, Int)])
-  : RDD[(Long, Array[Long])] = {
-    val cands = pairs.map(_._1).toArray
-    val others = pairs.map(_._2).toArray
-    val nP = cands.length
-    src
-      .select(col("label").cast("double"), col("f").cast("array<double>"))
+  private[graft] def codeMatrix(data: DataFrame): RDD[CodedRows] = {
+    val par = data.sparkSession.sparkContext.defaultParallelism
+    val src =
+      if (data.rdd.getNumPartitions < par) data.repartition(par) else data
+    src.select(col("label").cast("double"), col("f").cast("array<double>"))
       .queryExecution.toRdd
-      .mapPartitions(CellTable.countPartition(_, "pair") { (row, counter) =>
-        val labB = CellTable.bitsAt(row, 0)
-        val arr = if (row.isNullAt(1)) null else row.getArray(1)
-        val aLen = if (arr == null) 0 else arr.numElements()
-        var p = 0
-        while (p < nP) {
-          val c = cands(p)
-          val o = others(p)
-          counter.add(p,
-            if (c < aLen) CellTable.bitsAt(arr, c) else CellTable.NullBits,
-            if (o < 0) labB
-            else if (o < aLen) CellTable.bitsAt(arr, o)
-            else CellTable.NullBits)
-          p += 1
-        }
-      })
+      .mapPartitions(CodedRows.chunks(_))
+  }
+
+  /** Per-pair contingency tables over one pass of `coded`, as (pair index
+    * into `pairs`, [[graft.stats.CellTable]] chunk) records — the counting
+    * stage of [[pairStatsFused]]. Per chunk, each pair's two coded columns
+    * count into a dense lx × ly table ([[graft.stats.Coded.count]]), whose
+    * non-zero cells go to a [[graft.stats.CellCounter]]; its flush-on-full
+    * bounds memory. NULL values (and positions past a short array) count
+    * as their own level, as a SQL group key would.
+    */
+  private[graft] def pairCellCounts(coded: RDD[CodedRows],
+                                    pairs: Seq[(Int, Int)])
+  : RDD[(Long, Array[Long])] = {
+    val ps = pairs.toArray
+    coded.mapPartitions(CellTable.countPartition(_, "pair") { (m, counter) =>
+      var p = 0
+      while (p < ps.length) {
+        val (c, o) = ps(p)
+        Coded.count(m.col(c), if (o < 0) m.label else m.col(o), p, counter)
+        p += 1
+      }
+    })
   }
 
   private def round12(v: Double): Double = math.rint(v * 1e12) / 1e12
@@ -202,18 +209,11 @@ object IterativeFeatureSelection {
     *
     * @return per pair: (mi, chi2, lx, ly, n)
     */
-  private def pairStatsFused(data: DataFrame, pairs: Seq[(Int, Int)],
+  private def pairStatsFused(coded: RDD[CodedRows], pairs: Seq[(Int, Int)],
                              maxCategories: Int)
   : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
-    // The CPU-bound counting stage must not run at whatever split count
-    // the scan produced: a small input is one parquet split, counted on
-    // ONE core (measured 5 s versus 0.7 s spread over the machine). A
-    // multi-TB scan already has ≥ cores splits and skips this shuffle.
-    val par = data.sparkSession.sparkContext.defaultParallelism
-    val src =
-      if (data.rdd.getNumPartitions < par) data.repartition(par) else data
     val ps = pairs.toIndexedSeq
-    val folded = CellTable.foldByKey(pairCellCounts(src, ps), ps.size)
+    val folded = CellTable.foldByKey(pairCellCounts(coded, ps), ps.size)
     folded.foreach { case (p, (_, _, levels, _, _)) =>
       if (levels > maxCategories) throw new IllegalArgumentException(
         s"column ${ps(p.toInt)._1} has $levels distinct values, " +
@@ -231,11 +231,11 @@ object IterativeFeatureSelection {
   }
 
   /** Fused (mi, chi2, lx, ly, n) per pair: served from
-    * [[pairStatsCache]] where cached, one [[pairStatsFused]] job for the
-    * rest.
+    * [[pairStatsCache]] where cached, one [[pairStatsFused]] job over
+    * `coded` (built only then) for the rest.
     */
   private def pairStats(data: DataFrame, allPairs: Seq[(Int, Int)],
-                        maxCategories: Int)
+                        maxCategories: Int, coded: => RDD[CodedRows])
   : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
     require(allPairs.nonEmpty, "pairs must be non-empty")
     val planCache = graft.ops.PlanKey.of(data)
@@ -246,19 +246,20 @@ object IterativeFeatureSelection {
       allPairs.flatMap(p => pc.get(p).map(p -> _)).toMap)
     val pairs = allPairs.filterNot(cached.contains)
     if (pairs.isEmpty) return cached
-    val stats = pairStatsFused(data, pairs, maxCategories)
+    val stats = pairStatsFused(coded, pairs, maxCategories)
     planCache.foreach(_ ++= stats)
     cached ++ stats
   }
 
   /** One distributed job (none when every pair is cached): MI for an
     * arbitrary list of (cand, other) column pairs (`other == -1` is the
-    * label column).
+    * label column), coding `data` on the fly.
     */
   private[graft] def pairMIMulti(data: DataFrame, allPairs: Seq[(Int, Int)],
                                  maxCategories: Int)
   : Map[(Int, Int), Double] =
-    pairStats(data, allPairs, maxCategories).map { case (p, s) => p -> s._1 }
+    pairStats(data, allPairs, maxCategories, codeMatrix(data))
+      .map { case (p, s) => p -> s._1 }
 
   /** One distributed job (none when every pair is cached): Pearson
     * chi-square for an arbitrary list of (cand, other) column pairs
@@ -273,7 +274,7 @@ object IterativeFeatureSelection {
   private[graft] def pairChi2Multi(data: DataFrame, allPairs: Seq[(Int, Int)],
                                    maxCategories: Int)
   : Map[(Int, Int), (Double, Long, Long, Long)] =
-    pairStats(data, allPairs, maxCategories).map {
+    pairStats(data, allPairs, maxCategories, codeMatrix(data)).map {
       case (p, (_, chi2, lx, ly, n)) => p -> ((chi2, lx, ly, n))
     }
 
@@ -297,15 +298,15 @@ object IterativeFeatureSelection {
     * subset.
     *
     * Physical plan per selection: feature and label blocks are cut into
-    * slices of [[SliceWidth]] instances and shuffled ONCE, each
-    * (blockId, slice) to one partition, and each round is one job over
-    * that shuffle's output ([[blockedRound]]). Slices of one block land on
-    * different partitions, so a round counts on all cores even when the
-    * matrix is one block. The driver receives O(features) doubles per
-    * round — never a vector, never a contingency matrix. Same math as
-    * [[MutualInformation.fromVectors]] (the dense zero cells it infers are
-    * counted explicitly here — identical result), same memoized-redundancy
-    * greedy loop, same (score desc, id asc) ties.
+    * slices of [[SliceWidth]] instances, each slice is coded on the map
+    * side ([[graft.stats.Coded]]: 16-bit level codes), and the coded
+    * slices are shuffled ONCE, each (blockId, slice) to one partition.
+    * Each round is one job over that shuffle's output ([[blockedRound]]).
+    * Slices of one block land on different partitions, so a round counts
+    * on all cores even when the matrix is one block. The driver receives
+    * O(features) doubles per round — never a vector, never a contingency
+    * matrix. Same math as [[MutualInformation.fromVectors]], same
+    * memoized-redundancy greedy loop, same (score desc, id asc) ties.
     *
     * @param blocks      blocked matrix: idCol (feature id, integral),
     *                    blockCol (block id, integral), valuesCol
@@ -336,8 +337,8 @@ object IterativeFeatureSelection {
     // .cache()'s columnar builder buffers 10k multi-MB rows per batch, and
     // Dataset.checkpoint's row copies allocate outside the memory manager
     // while the caller's pinned fixture holds the storage budget. The one
-    // copy here is the slice shuffle's output, in shuffle files on disk,
-    // re-read by every round. Rows are (label?, id, bid, slice, block
+    // copy here is the slice shuffle's output, coded, in shuffle files on
+    // disk, re-read by every round. Rows are (label?, id, bid, slice, block
     // length, values[slice]): the label blocks reserve no feature id, and
     // a null or empty block is one slice, so round 0 still checks it.
     val values = col(valuesCol).cast("array<double>")
@@ -359,7 +360,8 @@ object IterativeFeatureSelection {
           "blocked alternate encoding: a block has a null id or block id")
         // consecutive slices of a block on consecutive partitions
         (Math.floorMod(r.getLong(2) + r.getInt(3), parts.toLong).toInt,
-          r.copy())
+          BlockSlice(r.getBoolean(0), r.getLong(1), r.getLong(2), r.getInt(3),
+            r.getInt(4), if (r.isNullAt(5)) null else Coded.of(r.getArray(5))))
       }
       .partitionBy(new HashPartitioner(parts))
     // Round 0: MI(feature, label) for every feature, and the tiling
@@ -418,68 +420,53 @@ object IterativeFeatureSelection {
   /** One selection round of [[selectRowsBlocked]], one job over the slice
     * shuffle `bySlice`. Per partition, a first pass keeps the SIDE slices
     * by (bid, slice) — the label's (`winner` = None) or the winner's, a
-    * 1/features fraction of the partition — and a second counts the
-    * (id, xBits, yBits) cells of every feature outside `skip` against
-    * them, NULL counted as a level exactly as in [[pairCellCounts]]. The
-    * per-id tables merge in one `reduceByKey` and fold on the executors.
-    * Returns 12-decimal-rounded MI (as in [[pairStatsFused]]) and n per
-    * id, and in round 0 the tiling report, tables keyed None. A repeated
-    * side block, a null array or a block length mismatch raises here.
+    * 1/features fraction of the partition — and a second counts the codes
+    * of every feature outside `skip` against them, as [[pairCellCounts]]
+    * does. The per-id tables merge in one `reduceByKey` and fold on the
+    * executors. Returns 12-decimal-rounded MI (as in [[pairStatsFused]])
+    * and n per id, and in round 0 the tiling report, tables keyed None. A
+    * repeated side block, a null array or a length mismatch raises here.
     */
-  private def blockedRound(bySlice: RDD[(Int, InternalRow)],
+  private def blockedRound(bySlice: RDD[(Int, BlockSlice)],
                            winner: Option[Long], skip: Set[Long])
   : (Seq[(Long, (Double, Long))], Seq[Array[Long]]) = {
     val sideName = winner.fold("the label tiling")(w => s"feature $w")
     val chunks = bySlice.zipPartitions(bySlice) { (first, second) =>
-      // (bid, slice) → (block length, values[slice])
-      val side = mutable.HashMap.empty[(Long, Int), (Int, ArrayData)]
+      val side = mutable.HashMap.empty[(Long, Int), BlockSlice]
       var report = Array.emptyLongArray
       var strays = 0
-      first.foreach { case (_, r) =>
-        val label = r.getBoolean(0)
-        if (winner.fold(label)(w => !label && r.getLong(1) == w)) {
-          val bid = r.getLong(2)
-          if (side.contains((bid, r.getInt(3))))
+      first.foreach { case (_, y) =>
+        if (winner.fold(y.label)(w => !y.label && y.id == w)) {
+          if (side.contains((y.bid, y.s)))
             throw new IllegalArgumentException(
-              s"blocked alternate encoding: $sideName repeats block $bid " +
-                "— feature and label tilings must be identical")
-          side((bid, r.getInt(3))) =
-            (r.getInt(4), if (r.isNullAt(5)) null else r.getArray(5))
-          if (label && r.getInt(3) == 0)
-            report = CellTable.add(report, LabelCell, bid, r.getInt(4), 1L)
+              s"blocked alternate encoding: $sideName repeats block " +
+                s"${y.bid} — feature and label tilings must be identical")
+          side((y.bid, y.s)) = y
+          if (y.label && y.s == 0)
+            report = CellTable.add(report, LabelCell, y.bid, y.len, 1L)
         }
       }
       val tables = CellTable.countPartition(second.map(_._2), "blocked") {
-        (r, counter) =>
-          val id = r.getLong(1)
-          val bid = r.getLong(2)
-          if (!r.getBoolean(0) && !skip(id)) side.get((bid, r.getInt(3)))
-          match {
+        (x, counter) =>
+          if (!x.label && !skip(x.id)) side.get((x.bid, x.s)) match {
             case None if winner.isEmpty => // a few strays name the error
               strays += 1
               if (strays <= 64)
-                report = CellTable.add(report, StrayCell, id, bid, 1L)
+                report = CellTable.add(report, StrayCell, x.id, x.bid, 1L)
             case None => throw new IllegalArgumentException(
-              s"blocked alternate encoding: feature $id has block $bid, " +
-                s"which $sideName lacks — missing or ragged blocks")
-            case Some((nY, ys)) =>
-              if (r.isNullAt(5) || ys == null)
+              s"blocked alternate encoding: feature ${x.id} has block " +
+                s"${x.bid}, which $sideName lacks — missing or ragged blocks")
+            case Some(y) =>
+              if (x.values == null || y.values == null)
                 throw new IllegalArgumentException(
-                  s"blocked alternate encoding: feature $id has a block " +
-                    "whose feature or label values array is null — " +
+                  s"blocked alternate encoding: feature ${x.id} has a " +
+                    "block whose feature or label values array is null — " +
                     "feature and label tilings must be identical")
-              val nX = r.getInt(4)
-              if (nX != nY) throw new IllegalArgumentException(
-                s"blocked alternate encoding: feature $id has a block of " +
-                  s"length $nX where the label block has length $nY — " +
-                  "feature and label tilings must be identical")
-              val xs = r.getArray(5)
-              var i = 0
-              while (i < xs.numElements()) {
-                counter.add(id, CellTable.bitsAt(xs, i),
-                  CellTable.bitsAt(ys, i))
-                i += 1
-              }
+              if (x.len != y.len) throw new IllegalArgumentException(
+                s"blocked alternate encoding: feature ${x.id} has a block " +
+                  s"of length ${x.len} where the label block has length " +
+                  s"${y.len} — feature and label tilings must be identical")
+              Coded.count(x.values, y.values, x.id, counter)
           }
       }
       tables.map { case (id, t) => (Option(id), t) } ++
@@ -515,9 +502,12 @@ object IterativeFeatureSelection {
     * for instance counts past [[DefaultMaxInstances]] — there, use
     * [[selectRowsBlocked]], which computes the IDENTICAL selection from
     * (feature, block, values) records with O(block) record width and no
-    * driver-side label vector. Callers insisting on the vector layout at
-    * a wider shape must opt in explicitly via `maxInstances` after sizing
-    * executor memory for ≥ 8·instances bytes per record.
+    * driver-side label vector. The mRMR fit reads each vector once, at
+    * 8 bytes per instance, and caches it coded: 2 bytes per instance plus
+    * 8 per distinct level in each 65,536-instance run. Callers insisting
+    * on the vector layout at a wider shape must opt in explicitly via
+    * `maxInstances` after sizing executor memory for ≥ 8·instances bytes
+    * per record.
     *
     * @param maxInstances guard on `labelsRow.size` (the vector width);
     *                     exceeded → IllegalArgumentException instead of a
@@ -546,20 +536,23 @@ object IterativeFeatureSelection {
   /** Fast path for mRMR: relevance is computed once, and each round folds
     * only MI(candidate, newestSelected) into a running redundancy sum —
     * O(candidates) vector-MI evaluations per round instead of the
-    * reference's O(candidates · |selected|). Each MI term is rounded to
-    * 12 decimals as in [[pairStatsFused]], so tied candidates go to the
-    * lowest id here too, not to floating-point noise. 2k − 1 jobs for k
-    * rounds:
-    * round 0's argmax also counts the candidates (k comes from the same
-    * job), and every later round is the winner's vector fetch plus one
-    * argmax that also materializes the newly cached candidates.
+    * reference's O(candidates · |selected|). Every vector is coded once
+    * ([[graft.stats.Coded.ofVector]]): the cached candidates carry codes,
+    * and the label and each winner are coded once and broadcast, so a
+    * round only counts codes ([[MutualInformation.fromCoded]]). Each MI
+    * term is rounded to 12 decimals as in [[pairStatsFused]], so tied
+    * candidates go to the lowest id here too, not to floating-point
+    * noise. 2k − 1 jobs for k rounds: round 0's argmax also counts the
+    * candidates (k comes from the same job), and every later round is the
+    * winner's codes fetch plus one argmax that also materializes the newly
+    * cached candidates.
     */
   private def selectRowsIncremental(df: DataFrame, idCol: String,
                                     featuresCol: String, num: Int,
                                     labelsRow: Vector)
   : Seq[(Long, Double)] = {
     val sc = df.sparkSession.sparkContext
-    val bLabels = sc.broadcast(labelsRow)
+    val bLabels = sc.broadcast(Coded.ofVector(labelsRow))
     // The per-round loop runs on the RDD API deliberately: through
     // Dataset/Catalyst each trivial round costs a full analyze/optimize/
     // encode cycle on the DRIVER — measured as the dominant, high-variance
@@ -569,9 +562,9 @@ object IterativeFeatureSelection {
       .select(col(idCol).cast(LongType).as("id"), col(featuresCol).as("vec"))
       .rdd
       .map { r =>
-        val v = r.getAs[Vector](1)
-        RowCandidate(r.getLong(0), v,
-          round12(MutualInformation.fromVectors(v, bLabels.value)), 0.0)
+        val codes = Coded.ofVector(r.getAs[Vector](1))
+        RowCandidate(r.getLong(0), codes,
+          round12(MutualInformation.fromCoded(codes, bLabels.value)), 0.0)
       }.cache()
     // (candidates, winner by (score desc, id asc)) in ONE job — only
     // scalar (id, score) pairs travel, never an instance-length vector.
@@ -591,12 +584,12 @@ object IterativeFeatureSelection {
       if (selected.size < k) {
         // one collect job: first() is take(1), which may scan twice
         val bWin = sc.broadcast(
-          cands.filter(_.id == wid).map(_.vec).collect().head)
+          cands.filter(_.id == wid).map(_.codes).collect().head)
         val next = cands
           .filter(_.id != wid)
           .map(c => c.copy(
-            redSum = c.redSum + round12(MutualInformation.fromVectors(
-              c.vec, bWin.value))))
+            redSum = c.redSum + round12(MutualInformation.fromCoded(
+              c.codes, bWin.value))))
           .cache()
         best = argmax(next, selected.size)._2 // materializes next
         cands.unpersist()
@@ -610,7 +603,9 @@ object IterativeFeatureSelection {
   /** General path for user-supplied row scores: the reference's shape
     * (broadcast all selected vectors, score every candidate each round) with
     * the physical fixes — cached input, and the winner's id and score from
-    * one reduce job and its vector from one lookup instead of three scans.
+    * one reduce job and its vector from one collect job (`first()` is
+    * `take(1)`, which may scan twice), fetched only while another round
+    * follows: at most 2k jobs for k rounds.
     */
   private def selectRowsGeneric(df: DataFrame, idCol: String,
                                 featuresCol: String, num: Int,
@@ -640,7 +635,8 @@ object IterativeFeatureSelection {
         }
         .reduce(better)
       selected += ((wid, sign * wscore))
-      selectedVecs += data.filter(_._1 == wid).first()._2
+      if (selected.size < k)
+        selectedVecs += data.filter(_._1 == wid).map(_._2).collect().head
     }
     data.unpersist()
     selected.toSeq

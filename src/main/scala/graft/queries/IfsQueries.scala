@@ -275,10 +275,11 @@ object IfsQueries {
     // O3+O4: MI(feature, label) for every feature — one distributed job.
     "ifs_mi_relevance" -> { (s, dir) =>
       import s.implicits._
-      val mi = IterativeFeatureSelection.pairMI(
-        matrix(s, dir).select("label", "f"), featureDefs.indices, -1,
+      val mi = IterativeFeatureSelection.pairMIMulti(
+        matrix(s, dir).select("label", "f"),
+        featureDefs.indices.map(i => (i, -1)),
         IterativeFeatureSelection.DefaultMaxCategories)
-      mi.toSeq.map { case (i, v) =>
+      mi.toSeq.map { case ((i, _), v) =>
         (featureNames(i), math.rint(v * 1e6) / 1e6)
       }.toDF("feature", "mi").orderBy("feature")
     },

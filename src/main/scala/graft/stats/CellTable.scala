@@ -2,7 +2,6 @@ package graft.stats
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 
 /** Receives one (key, xBits, yBits, count) cell of a [[CellTable]]. */
@@ -11,9 +10,10 @@ private[graft] trait CellSink {
 }
 
 /** Exact co-occurrence counts keyed (key, xBits, yBits) — the one
-  * contingency-count primitive behind every MI and chi² term: the
-  * conventional pair counter (key = pair index), the blocked alternate
-  * encoding (key = feature id) and the `MIAggregate` buffer (key 0).
+  * contingency-count format behind every MI and chi² term: the cells that
+  * [[Coded.count]] emits for the conventional pairs (key = pair index),
+  * the blocked alternate encoding (key = feature id) and the vector MI
+  * (key 0), and the `MIAggregate` buffer (key 0).
   *
   * A table is a plain `Array[Long]`, so Spark encodes it natively as an
   * aggregation buffer (ArrayType(Long), no Kryo). Index 0 holds the
@@ -101,13 +101,13 @@ private[graft] object CellTable {
   }
 
   /** Count one partition of a Spark counting pass: `read` feeds each input
-    * row's cells to the counter, and the cells of every flush leave as
+    * record's cells to the counter, and the cells of every flush leave as
     * one (key, table) chunk per key — lazily, so the partition holds at
     * most one flush's cells besides the counter. `what` names the pass in
     * the guard's error.
     */
-  def countPartition(rows: Iterator[InternalRow], what: String)(
-      read: (InternalRow, CellCounter) => Unit)
+  def countPartition[T](rows: Iterator[T], what: String)(
+      read: (T, CellCounter) => Unit)
   : Iterator[(Long, Array[Long])] = {
     val chunks = scala.collection.mutable.LongMap.empty[Array[Long]]
     val counter = new CellCounter(what, (k, x, y, c) =>
@@ -164,19 +164,20 @@ private[graft] object CellTable {
   private final val NegZeroBits = java.lang.Double.doubleToLongBits(-0.0)
 }
 
-/** One partition's [[CellTable]]: counts cells one at a time and, at
+/** One partition's [[CellTable]]: sums cells as they come and, at
   * [[CellTable.FlushCap]] distinct cells, emits them to `sink` and restarts,
   * so memory stays bounded for pathological (continuous-valued) inputs
   * without a separate fallback path. Emitting more than
   * [[CellTable.MaxEmitted]] cells raises the maxCategories contract error.
-  * Call [[flush]] once after the last row.
+  * Call [[flush]] once after the last record.
   */
-private[graft] final class CellCounter(what: String, sink: CellSink) {
+private[graft] final class CellCounter(what: String, sink: CellSink)
+    extends CellSink {
   private var table = Array.emptyLongArray
   private var emitted = 0L
 
-  def add(key: Long, xBits: Long, yBits: Long): Unit = {
-    table = CellTable.add(table, key, xBits, yBits, 1L)
+  def cell(key: Long, xBits: Long, yBits: Long, count: Long): Unit = {
+    table = CellTable.add(table, key, xBits, yBits, count)
     if (table(0) >= CellTable.FlushCap) flush()
   }
 

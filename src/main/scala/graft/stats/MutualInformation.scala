@@ -10,9 +10,8 @@ import scala.collection.mutable
   * `reference:src/main/scala/ifs/ml/stats/MutualInformation.scala:19-77`):
   *   - natural log (nats), `MI = Σ pxy · ln(pxy / (px·py))`
   *   - zero-count cells are skipped (the `pxy > 0` guard)
-  *   - the vector form is sparse-aware: only positions where at least one of
-  *     the two vectors is non-zero are touched; the (0,0) cell count is
-  *     inferred as `size − touched` without iterating the zero-zero mass.
+  *   - a sparse vector's implicit zeros are the zero level, exactly as
+  *     stored zeros are.
   *
   * Values are treated as exact categorical levels (`==` grouping, as in
   * Spark's own grouping: ±0.0 are one level, every NaN is one level) —
@@ -89,56 +88,34 @@ object MutualInformation {
       j <- m(i).indices
     } yield (i, j, m(i)(j)))
 
-  /** MI of two equal-length categorical vectors, sparse-aware.
-    * Only indices where a(i) != 0 or b(i) != 0 contribute individually; the
-    * (0,0) cell count is inferred as `size − touched`. Equivalent to a full
-    * dense contingency build.
+  /** MI of two equal-length categorical vectors, sparse or dense.
     *
-    * Hot path of the alternate-encoding selection (runs once per candidate
-    * per round on instance-length vectors), so it is allocation-free per
-    * element: per-side level dictionaries and the pair-count table are
-    * primitive open-addressed maps keyed on the raw double bit patterns —
-    * ~20 ns/element instead of the ~µs of a boxed-tuple map.
+    * Hot path of the generic alternate-encoding selection (`RowScore`
+    * runs it per candidate per round on instance-length vectors): both
+    * vectors are coded ([[Coded.ofVector]]) and counted as codes
+    * ([[fromCoded]]), the same coder and dense counter as every IFS
+    * encoding.
     */
-  def fromVectors(a: Vector, b: Vector): Double = {
-    require(a.size == b.size,
-      s"vectors must have equal length (${a.size} != ${b.size})")
-    val n = a.size
-    if (n == 0) return 0.0
-    val da = a.toDense.values
-    val db = b.toDense.values
-    val dictA = new LongIntMap
-    val dictB = new LongIntMap
-    val counts = new LongLongMap
-    var touched = 0L
-    var i = 0
-    while (i < n) {
-      val av = da(i); val bv = db(i)
-      if (av != 0.0 || bv != 0.0) {
-        // a ±0.0 paired with a non-zero value is the zero level, keyed 0L
-        // (the bits of 0.0), never the bits of -0.0
-        val ia = dictA.getOrInsert(
-          if (av == 0.0) 0L else java.lang.Double.doubleToLongBits(av))
-        val ib = dictB.getOrInsert(
-          if (bv == 0.0) 0L else java.lang.Double.doubleToLongBits(bv))
-        counts.add((ia.toLong << 32) | ib.toLong, 1L)
-        touched += 1
-      }
-      i += 1
-    }
-    val zz = n - touched
-    if (zz > 0) {
-      val ia = dictA.getOrInsert(0L)
-      val ib = dictB.getOrInsert(0L)
-      counts.add((ia.toLong << 32) | ib.toLong, zz)
-    }
-    fold(counts, dictA.size, dictB.size)._1
+  def fromVectors(a: Vector, b: Vector): Double =
+    fromCoded(Coded.ofVector(a), Coded.ofVector(b))
+
+  /** MI of two coded vectors ([[Coded.ofVector]]), through the
+    * [[CellTable]] fold that every IFS encoding uses.
+    */
+  private[graft] def fromCoded(a: Array[Coded], b: Array[Coded]): Double = {
+    val (na, nb) = (a.map(_.size.toLong).sum, b.map(_.size.toLong).sum)
+    require(na == nb, s"vectors must have equal length ($na != $nb)")
+    var t = Array.emptyLongArray
+    val sink: CellSink = (k, x, y, c) => t = CellTable.add(t, k, x, y, c)
+    a.indices.foreach(r => Coded.count(a(r), b(r), 0L, sink))
+    CellTable.foldTable(t)._1
   }
 }
 
 /** Minimal open-addressed Long→Int map (linear probing, power-of-two
   * capacity). `getOrInsert` assigns dense ids 0..size-1 in first-seen
-  * order. Not thread-safe; built for the MI hot loop.
+  * order, and [[byId]] maps them back. Not thread-safe; built for the MI
+  * hot loop.
   */
 private[stats] final class LongIntMap(initialCapacity: Int = 32) {
   private var cap = Integer.highestOneBit(math.max(initialCapacity, 16)) * 2
@@ -146,13 +123,19 @@ private[stats] final class LongIntMap(initialCapacity: Int = 32) {
   private var vals = new Array[Int](cap)
   java.util.Arrays.fill(vals, -1)
   private var n = 0
+  private var inOrder = new Array[Long](16)
 
   def size: Int = n
 
+  /** The keys by id: `byId(getOrInsert(k)) == k`. */
+  def byId: Array[Long] = java.util.Arrays.copyOf(inOrder, n)
+
+  // Fibonacci hashing, the slot from the product's TOP bits: a double's
+  // bits vary in its high bits (1.0 … 7.0 differ only in their top 16),
+  // which a multiply never carries down to its low bits
   private def slot(key: Long, ks: Array[Long], vs: Array[Int]): Int = {
-    var h = key * -7046029254386353131L
-    h ^= h >>> 32
-    var p = (h & (ks.length - 1)).toInt
+    var p = ((key * -7046029254386353131L) >>>
+      java.lang.Long.numberOfLeadingZeros(ks.length - 1L)).toInt
     while (vs(p) != -1 && ks(p) != key) p = (p + 1) & (ks.length - 1)
     p
   }
@@ -160,7 +143,10 @@ private[stats] final class LongIntMap(initialCapacity: Int = 32) {
   def getOrInsert(key: Long): Int = {
     val p = slot(key, keys, vals)
     if (vals(p) != -1) return vals(p)
-    keys(p) = key; vals(p) = n; n += 1
+    keys(p) = key; vals(p) = n
+    if (n == inOrder.length) inOrder = java.util.Arrays.copyOf(inOrder, n * 2)
+    inOrder(n) = key
+    n += 1
     if (n * 4 > cap * 3) grow()
     n - 1
   }

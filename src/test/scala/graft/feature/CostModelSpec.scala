@@ -12,8 +12,9 @@ import org.scalatest.matchers.should.Matchers
   * counting pass per selection round; the blocked alternate encoding at
   * most k + 1 (one job per round over one shuffle of block slices, whose
   * map stage later rounds skip) and the vector one at most 2k − 1 (an argmax
-  * and a winner fetch per round), so a plan change that adds jobs fails
-  * here rather than only in the benchmark.
+  * and a winner fetch per round), or 2k + 1 under a generic `RowScore`, so
+  * a plan change that adds jobs fails here rather than only in the
+  * benchmark.
   */
 class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
@@ -111,6 +112,19 @@ class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
       .fit(vectorDF()).selectedRows)
     selected.length shouldBe k
     jobs should be <= 2 * k - 1
+  }
+
+  test("a generic-score vector fit runs at most 2k + 1 jobs") {
+    // the same mRMR through the public RowScore path, not the fast path
+    object GenericMrmr extends graft.stats.RowScore {
+      override def score(f: Vector, l: Vector, sel: Seq[Vector]): Double =
+        graft.stats.RowMRMR.score(f, l, sel)
+    }
+    val (selected, jobs, _) = jobsOf(IterativeFeatureSelection.selectRows(
+      vectorDF(), "id", "features", k, Vectors.dense(labelVector),
+      score = GenericMrmr))
+    selected.length shouldBe k
+    jobs should be <= 2 * k + 1
   }
 
   test("blocked fits with more blocks than cores, or one block, match " +

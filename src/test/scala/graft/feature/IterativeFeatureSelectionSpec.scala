@@ -73,6 +73,31 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
     }
   }
 
+  test("selectColumns takes the width from every row: a short first row " +
+    "counts its missing positions as NULL") {
+    import spark.implicits._
+    val (labels, m) = randomMatrix(seed = 9, rows = 41, cols = 3)
+    val short = m.head.take(1)
+    val ragged = ((short, labels.head) +: m.tail.zip(labels.tail)).toSeq
+      .map { case (row, l) => (l.toInt, Vectors.dense(row)) }
+      .toDF("label", "features").repartition(1)
+    val got = IterativeFeatureSelection.selectColumns(
+      ragged, "label", "features", num = 2)
+    // NaN is a level no other value of the matrix takes, as NULL is
+    val want = greedyOracle(labels,
+      m.updated(0, short ++ Array(Double.NaN, Double.NaN)), 2)
+    got.map(_._1) shouldBe want.map(_._1)
+    got.zip(want).foreach { case ((_, gs), (_, ws)) =>
+      gs shouldBe ws +- 1e-9
+    }
+  }
+
+  test("selectColumns on an empty input selects nothing") {
+    IterativeFeatureSelection.selectColumns(
+      conventionalDF(Array.empty, Array.empty), "label", "features",
+      num = 3) shouldBe empty
+  }
+
   test("selectRows matches the oracle and the conventional path " +
     "(the reference's own cross-encoding invariant)") {
     val (labels, m) = randomMatrix(seed = 11, rows = 90, cols = 7)

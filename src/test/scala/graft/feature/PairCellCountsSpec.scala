@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Differential lock on the imperative contingency counter: on randomized
+/** Differential lock on the coded contingency counter: on randomized
   * matrices — including NULLs, NaN, ±0.0 and heavy ties — the cell
   * counts must equal the Catalyst spelling it replaced
   * (`crossJoin(pairs) → groupBy().count()`), cell for cell. This is the
@@ -92,7 +92,8 @@ class PairCellCountsSpec extends AnyFlatSpec with Matchers
       val pairs = (0 until nF).map(i => (i, -1)) ++
         (for (i <- 0 until nF; j <- 0 until i) yield (i, j))
       val got = canon(cellsOf(
-        IterativeFeatureSelection.pairCellCounts(src, pairs), pairs))
+        IterativeFeatureSelection.pairCellCounts(
+          IterativeFeatureSelection.codeMatrix(src), pairs), pairs))
       val want = canon(oldSpelling(src, pairs))
       withClue(s"trial $trial (nF=$nF): ") { got shouldBe want }
     }

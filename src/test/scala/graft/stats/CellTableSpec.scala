@@ -19,7 +19,7 @@ class CellTableSpec extends AnyFunSuite with Matchers {
       emitted += 1
     })
     for (pass <- 0 until 3; j <- 0 until distinct if j % 3 >= pass)
-      counter.add(j % 7, j, 31L * j)
+      counter.cell(j % 7, j, 31L * j, 1L)
     counter.flush()
     assert(emitted > distinct, "no flush ran before the final one")
     (0 until distinct).foreach(j => assert(sums(j) == 1 + j % 3, s"cell $j"))
@@ -27,9 +27,9 @@ class CellTableSpec extends AnyFunSuite with Matchers {
 
   test("emitting more than MaxEmitted cells raises the contract error") {
     val counter = new CellCounter("test", (_, _, _, _) => ())
-    (0 until CellTable.MaxEmitted).foreach(j => counter.add(0L, j, 0L))
+    (0 until CellTable.MaxEmitted).foreach(j => counter.cell(0L, j, 0L, 1L))
     counter.flush() // exactly MaxEmitted cells is still within the guard
-    counter.add(0L, -1L, 0L)
+    counter.cell(0L, -1L, 0L, 1L)
     val ex = intercept[IllegalArgumentException](counter.flush())
     ex.getMessage should include("test contingency exceeded")
   }

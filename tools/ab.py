@@ -7,9 +7,11 @@ A_DIR is the base (e.g. a `git clone` of the parent commit), B_DIR the
 change. Pair i runs `perfbench/run.py --workload W --seed S+i --trace 0`
 once in each checkout, alternating which side runs first, so host drift
 falls on both sides alike, for the `run_seconds` A's BENCHMARK.json
-fixes. Each pair's end-to-end metrics are printed as they land, and a
-failed run (non-zero exit or `correct` false) with the tail of its
-stderr. At the end, per metric, each side's median and quartiles over
+fixes. Each pair's end-to-end metrics are printed as they land, with the
+host steal time (CPU time the hypervisor gave other guests) that
+`run.py` reports for each run, and a failed run (non-zero exit or
+`correct` false) with the tail of its stderr. At the end, each side's
+median steal, then per metric each side's median and quartiles over
 the pairs where both runs succeeded, the number of pairs B wins out of
 all pairs run (a pair with a failed side, and a tie, counts for
 neither), and whether a
@@ -22,6 +24,7 @@ checkout meanwhile.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -29,7 +32,8 @@ import sys
 
 def run(checkout, workload, seed, seconds):
     """One untraced benchmark run: (metrics, None), or (None, why) if it
-    failed."""
+    failed. The metrics include the run's host steal seconds as
+    `host_steal_s`, when `run.py` printed them."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -44,7 +48,11 @@ def run(checkout, workload, seed, seconds):
         tail = "\n".join(p.stderr.strip().splitlines()[-20:])
         return None, (f"exit {p.returncode}, correct={out.get('correct')}"
                       f"\n{tail}")
-    return {k: v["value"] for k, v in out["metrics"].items()}, None
+    metrics = {k: v["value"] for k, v in out["metrics"].items()}
+    steal = re.search(r"host-steal=([0-9.]+)s", p.stdout)
+    if steal:
+        metrics["host_steal_s"] = float(steal.group(1))
+    return metrics, None
 
 
 def quartiles(xs):
@@ -84,13 +92,19 @@ def main():
             continue
         pairs.append(got)
         print(f"pair {i} seed={seed} first={order[0]}: " + ", ".join(
-            f"{n} {got['A'][n]:.4g} -> {got['B'][n]:.4g}" for n in names),
-            flush=True)
+            f"{n} {got['A'][n]:.4g} -> {got['B'][n]:.4g}"
+            for n in names + ["host_steal_s"] if n in got["A"] and
+            n in got["B"]), flush=True)
 
     print(f"{a.workload}: {len(pairs)} of {a.pairs} pairs complete, "
           f"failed runs A {failed['A']}, B {failed['B']}")
     if not pairs:
         sys.exit(1)
+    steal = {side: [p[side]["host_steal_s"] for p in pairs
+                    if "host_steal_s" in p[side]] for side in ("A", "B")}
+    print("  host steal s: " + ", ".join(
+        f"{side} median {statistics.median(xs):.1f} over {len(xs)} runs"
+        if xs else f"{side} not reported" for side, xs in steal.items()))
     for n in names:
         xa = [p["A"][n] for p in pairs]
         xb = [p["B"][n] for p in pairs]
