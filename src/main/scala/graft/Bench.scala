@@ -134,61 +134,46 @@ object Bench {
     }
     warm("streaming machinery") {
       // One tiny parquet-source streaming query per stateful shape the
-      // 17 q_stream_* gates use (windowed agg, dropDuplicates state,
-      // flatMapGroupsWithState typed state, checkpointed file sink) — the
+      // stream-starting gates use (windowed agg, dropDuplicates state,
+      // flatMapGroupsWithState typed state, checkpointed file sink),
+      // started through the gates' own runner — the
       // StreamExecution/state-store/memory-sink infrastructure JIT is
       // ~0.5-1.5s PER SHAPE on a cold JVM and otherwise lands on
       // whichever streaming gate runs first. Synthetic input (200 rows),
       // so no gate's actual scan gets pre-warmed beyond its siblings'.
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_bench_stream").toString
-      val tiny = spark.range(200).select(
-        timestamp_micros(lit(1700000000000000L) + col("id") * 60000000L)
-          .as("ts"),
-        (col("id") % 7).as("k"), col("id").cast("double").as("v"))
-      tiny.write.mode("overwrite").parquet(s"$base/in")
-      val src = spark.readStream.schema(tiny.schema).parquet(s"$base/in")
-      val oldSp = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        def drain(
-            q: org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit = {
-          val st = q.trigger(Trigger.AvailableNow()).start()
-          st.awaitTermination(); ()
-        }
-        drain(src.withWatermark("ts", "0 seconds")
-          .groupBy(window(col("ts"), "1 hour"), col("k"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName("warm_stream_agg"))
-        drain(src.select(col("k"), col("v"))
-          .dropDuplicates("k")
-          .writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName("warm_stream_dedup"))
-        drain(graft.streaming.Sessionize
-          .sessionStream(src.select(col("ts"),
+      import org.apache.spark.sql.streaming.OutputMode
+      import queries.StreamGate
+      StreamGate.withTempDir("graft_bench_stream") { base =>
+        val tiny = spark.range(200).select(
+          timestamp_micros(lit(1700000000000000L) + col("id") * 60000000L)
+            .as("ts"),
+          (col("id") % 7).as("k"), col("id").cast("double").as("v"))
+        tiny.write.mode("overwrite").parquet(s"$base/in")
+        val src = spark.readStream.schema(tiny.schema).parquet(s"$base/in")
+        StreamGate.memory(spark, sfDir, "warm_stream_agg",
+          src.withWatermark("ts", "0 seconds")
+            .groupBy(window(col("ts"), "1 hour"), col("k"))
+            .agg(count(lit(1)).as("n")), OutputMode.Complete())
+        StreamGate.memory(spark, sfDir, "warm_stream_dedup",
+          src.select(col("k"), col("v")).dropDuplicates("k"),
+          OutputMode.Append())
+        StreamGate.memory(spark, sfDir, "warm_stream_session",
+          graft.streaming.Sessionize.sessionStream(src.select(col("ts"),
             col("k").cast("string").as("user_id"),
-            col("k").as("event_id")), "30 minutes", "0 seconds")
-          .writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName("warm_stream_session"))
-        drain(src.writeStream.outputMode(OutputMode.Append())
-          .format("parquet").option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt"))
-        locally {
-          import spark.implicits._
-          drain(graft.streaming.Stateful.statefulSessions(
+            col("k").as("event_id")), "30 minutes", "0 seconds"),
+          OutputMode.Append())
+        StreamGate.parquet(spark, sfDir, "warm_stream_file", src) {
+          (out, _) => spark.read.parquet(out)
+        }
+        import spark.implicits._
+        StreamGate.memory(spark, sfDir, "warm_stream_fmgws",
+          graft.streaming.Stateful.statefulSessions(
             src.select(col("k").as("user_id"), col("ts"))
               .as[graft.streaming.UserEvent],
-            30L * 60 * 1000, "0 seconds")
-            .writeStream.outputMode(OutputMode.Append())
-            .format("memory").queryName("warm_stream_fmgws"))
-        }
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", oldSp)
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(base)); ()
+            30L * 60 * 1000, "0 seconds"),
+          OutputMode.Append())
+        ()
       }
     }
     warm("knn machinery") {
@@ -294,22 +279,16 @@ object Bench {
     // pinned to the core count are a local-mode constant — at 100× data
     // each reduce task's aggregation state grows 100× and the 8 GiB
     // heap dies (observed: q_basket_pairs' pair-domain hash aggregate
-    // OOM'd the sf10 leg at 32 partitions; green at 128). Derive the
-    // width from the leg's input bytes (~8 MB of input per reduce
-    // partition, floor = cluster width, cap 2000). At the driver's
-    // bench scale (sf0.1, and sf1) the formula lands exactly on the old
+    // OOM'd the sf10 leg at 32 partitions; green at 128). The width is
+    // Q.exchangeWidth of the leg's whole input. At the bench
+    // scales (sf0.1, and sf1) the formula lands exactly on the old
     // core-count value, so the driver's ledgers stay comparable; sf3
     // moves 32 → ~47 and sf10 to ~166 (the fix). The stateful streaming
     // gates pin their own state partitioning and are unaffected.
     val shufflePartitions = {
-      val p = new org.apache.hadoop.fs.Path(sfDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes =
-        try fs.getContentSummary(p).getLength
-        catch { case NonFatal(_) => 0L }
-      val parts = math.max(spark.sparkContext.defaultParallelism.toLong,
-        math.min(2000L, bytes / (8L << 20))).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val bytes = queries.Q.inputBytes(spark, sfDir)
+      val parts = queries.Q.exchangeWidth(spark, sfDir)
+      spark.conf.set(queries.Q.ShufflePartitions, parts.toString)
       // Logged + emitted on the total line (ADVICE r13 #4): the "lands on
       // the old core-count value at sf0.1" claim holds only while the
       // dir's byte count stays under 8 MB × cores — make a comparability

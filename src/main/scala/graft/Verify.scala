@@ -16,13 +16,30 @@ import java.nio.file.{Files, Paths}
   * caches) are derived up front so parallel gates never race on a
   * derivation.
   *
-  * Gates are NOT conf-isolated: the streaming gates in `EventQueries` set
-  * and restore confs on that shared session (`withStatePartitions` for
-  * `spark.sql.shuffle.partitions`, `withConfs` for the state-store
-  * provider), so one gate's restore can land inside a concurrent
-  * sibling's window. ROADMAP direction 2 (gate isolation) tracks the fix.
+  * Gates are not fully conf-isolated. Concurrent gates still share
+  * these session confs:
+  *   - `Q.events` / `Q.eventsStream` set `spark.sql.legacy.parquet.
+  *     nanosAsLong` = true on every call (never restored, so every gate
+  *     sees the same value);
+  *   - `SourceQueries`' `q_dynamic_overwrite` sets and restores
+  *     `spark.sql.sources.partitionOverwriteMode` around its one write;
+  *   - `StreamGate.start` sets the state width and the state-store
+  *     provider for the length of one `start()`, under a lock, so two
+  *     streaming gates never see each other's values, but a batch gate
+  *     planning inside that window reads the state width as its shuffle
+  *     width. ROADMAP direction 2 (gate isolation) tracks the rest.
+  *
+  * A gate that neither writes its dump nor reports an error is recorded
+  * in `_errors.json` as `no output written` ([[silentGates]]), so the
+  * oracle compare shows it as failed instead of omitting it.
   */
 object Verify {
+
+  /** Selected gates with neither a dump nor a recorded error. */
+  private[graft] def silentGates(selected: Seq[String], dumped: Set[String],
+                                 failed: Set[String]): Seq[String] =
+    selected.filterNot(n => dumped(n) || failed(n))
+
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     val (sfDir, outDir) = (args(0), args(1))
@@ -37,13 +54,20 @@ object Verify {
       // Concurrent gates each submit small jobs; FAIR keeps one heavy
       // gate's stages from head-of-line-blocking every sibling's tasks.
       .config("spark.scheduler.mode", "FAIR"))
-    new java.io.File(outDir).mkdirs()
     // Sorted name order, same as Bench: wave composition (and so the
     // cold-cost path of the session caches) stays fixed as gates are added.
     val selected =
       (if (only.isEmpty) SparkEntry.queries
        else SparkEntry.queries.filter { case (n, _) => only(n) })
         .toSeq.sortBy(_._1)
+    // Clear the selected gates' dumps from an earlier run into outDir, so
+    // a `_SUCCESS` found after the waves is this run's and a gate that
+    // writes nothing shows as `no output written`, not as its old dump.
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (n, _) =>
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$outDir/$n"))
+    }
     // Derive every cross-gate shared fixture BEFORE the parallel loop:
     // SessionCache.getOrElsePin serializes racing derivations, but warming
     // up front means no wave stalls its whole width behind one transpose.
@@ -102,6 +126,13 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     import scala.jdk.CollectionConverters._
+    val names = selected.map(_._1)
+    val dumped = names.filter(n =>
+      Files.exists(Paths.get(s"$outDir/$n/_SUCCESS"))).toSet
+    silentGates(names, dumped, errors.keySet.asScala.toSet)
+      .foreach(errors.put(_, "no output written"))
+    System.err.println(s"[verify] registered=${names.size} " +
+      s"dumped=${dumped.size} failed=${errors.size}")
     val errJson = errors.asScala.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)

@@ -580,7 +580,7 @@ object EmbeddingQueries {
       // cells) — load it ONCE outside the stream instead of twice per
       // micro-batch (query + append each paid the read+collect).
       val idxCents = A.loadCentroids(s, idxPath)
-      val q = stream.writeStream
+      StreamGate.start(s, dir, stream)(_
         .option("checkpointLocation", ckptDir)
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           val got = A.queryIvfWith(s, df, "vec_id", "embedding", idxPath,
@@ -594,8 +594,7 @@ object EmbeddingQueries {
           ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .start()).awaitTermination()
       import scala.jdk.CollectionConverters._
       val foundPairs = found.values().asScala.flatten.toSeq
         .toDF("fq", "fi").distinct()

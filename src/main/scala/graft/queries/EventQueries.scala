@@ -24,6 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * no global sort); the funnel join shuffles both sides on user_id and
   * applies the time predicate post-join — the standard shape AQE handles
   * well under skew.
+  *
+  * Streaming: every gate that starts a stream does so through
+  * [[StreamGate]], which owns the state width, the state-store provider,
+  * the sink and its drain. A gate body names only its query, its sink
+  * shape (memory, exact-count drain or parquet) and its state store.
   */
 object EventQueries {
 
@@ -53,126 +58,22 @@ object EventQueries {
           unix_micros(col("ts")) - col("prev_us") > GapUs, 1).otherwise(0))
   }
 
-  /** Run `f` with a state-sized shuffle-partition count, restoring the
-    * session's setting after. A stateful streaming query creates and
-    * commits one state store per shuffle partition per stateful operator
-    * per micro-batch; for kilobyte-scale state, dozens of partitions are
-    * pure fixed overhead (measured ~2× on the stream-stream join). Real
-    * deployments size this knob to state volume the same way — it is
-    * pinned into the checkpoint at first start. Only the streaming
-    * execution runs inside `f`; the returned DataFrame over the memory
-    * sink is batch and unaffected.
-    */
-  private val statePartsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  /** State partition count for a scale dir: derived from the events
-    * input size instead of a local-mode constant (the same defect class
-    * as the shuffle-width bug that OOM'd the sf10 pair-domain aggregate
-    * — a knob tuned at one scale silently pinned into every scale's
-    * checkpoints). ~4 MB of events input per state partition, floor 8
-    * (the sf0.1 knob-test optimum — 2/4/8 measured flat there, so the
-    * floor is NOT a tuning cliff), cap 200. At sf0.1 (2 MB events) this
-    * lands exactly on the historical 8, so ledgers stay comparable;
-    * sf10's 112 MB events get 28. Fresh checkpoints are created per
-    * run, so the count is free to differ per scale.
-    */
-  private def statePartitions(s: SparkSession, dir: String): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt)
-      .getOrElse(statePartsCache.getOrElseUpdate(dir, {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-        val bytes =
-          try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .getContentSummary(p).getLength
-          catch { case scala.util.control.NonFatal(_) => 0L }
-        math.max(8L, math.min(200L, bytes / (4L << 20))).toInt
-      }))
-
-  private def withStatePartitions[A](s: SparkSession, dir: String)
-                                    (f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, statePartitions(s, dir).toString)
-    try f finally s.conf.set(key, old)
-  }
-
-  /** Set session confs for the duration of `f`, restoring (or unsetting)
-    * the previous values after — the state-store provider swap pattern.
-    */
-  private def withConfs[A](s: SparkSession, kv: (String, String)*)
-                          (f: => A): A = {
-    val olds = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
-  /** Drain a ProcessingTime-TimeMode TWS stream: such an operator always
-    * reports shouldRunAnotherBatch = true (TTL state may need eviction),
-    * so Trigger.AvailableNow never terminates and the no-new-data flag
-    * processAllAvailable waits on is never set (measured: 5,000+ empty
-    * micro-batches) — the bounded run instead polls the memory sink for
-    * the EXACT expected emission count, then stops the query. `expected`
-    * is computable because the TTL'd gates force one micro-batch per
-    * input file (maxFilesPerTrigger = 1) and every processor emits
-    * exactly one row per (key, batch-containing-its-rows).
-    */
-  private def drainTws(s: SparkSession, name: String, expected: Long)
-                      (start: => org.apache.spark.sql.streaming
-                        .StreamingQuery): Unit = {
-    val q = start
-    try {
-      // Deadline scales with the expected emission count (ADVICE r12):
-      // under maxFilesPerTrigger=1 + RocksDB each emission rides its own
-      // micro-batch, so larger scale factors legitimately take longer —
-      // a fixed 180 s turned slow-but-correct into a hard failure. 180 s
-      // floor + 50 ms per expected emission, and the failure message
-      // reports elapsed progress so a stall is tellable from slowness.
-      //
-      // Polling reads the DRIVER-LOCAL progress metrics (sink
-      // numOutputRows per finished batch) instead of running a count()
-      // JOB per 100 ms poll — those poll jobs competed with the stream's
-      // own micro-batches for cores for the whole drain. The sink
-      // count() at the end stays AUTHORITATIVE: the metric only gates
-      // when we first look, never what is required.
-      val budgetSec = 180L + expected / 20L
-      val t0 = System.nanoTime()
-      val deadline = t0 + budgetSec * 1000000000L
-      def emittedMetric: Long = {
-        val per = q.recentProgress.map(_.sink.numOutputRows)
-        if (per.isEmpty || per.exists(_ < 0)) -1L else per.sum
-      }
-      var polls = 0
-      var done = false
-      while (!done && System.nanoTime() < deadline && q.exception.isEmpty) {
-        val e = emittedMetric
-        // fall back to the real count when the metric is unavailable, and
-        // re-verify with it every ~2 s so a miscounting metric can only
-        // delay the authoritative check, never wedge the drain
-        done = (e >= expected || e < 0 || polls % 20 == 19) &&
-          s.table(name).count() >= expected
-        polls += 1
-        if (!done) Thread.sleep(100L)
-      }
-      q.exception.foreach(throw _)
-      val got = s.table(name).count()
-      require(got == expected,
-        s"$name: sink has $got of $expected expected rows after " +
-          f"${(System.nanoTime() - t0) / 1e9}%.0f s (budget ${budgetSec} s)")
-    } finally q.stop()
-  }
+  /** Per-user session counts of a closed-session emission. */
+  private def perUserSessions(sessions: DataFrame): DataFrame =
+    sessions.groupBy("user_id")
+      .agg(count(lit(1)).cast("long").as("n_sessions"),
+        sum(col("n_events")).cast("long").as("n_events"))
+      .orderBy("user_id")
 
   /** The custom-state gap-sessionization pipeline shared by
     * q_stream_state_sessions (default HDFS-backed store) and
     * q_stream_rocksdb_sessions (RocksDB provider): run the stateful
-    * query to a memory sink under `namePrefix`, return per-user session
-    * counts. Both gates answer to the identical oracle, so a provider
-    * swap that changed ANY emitted row would hash-mismatch.
+    * query on `store`, return per-user session counts. Both gates answer
+    * to the identical oracle, so a provider swap that changed ANY emitted
+    * row would hash-mismatch.
     */
-  private def stateSessionCounts(s: SparkSession, dir: String,
-                                 namePrefix: String): DataFrame = {
+  private def stateSessionCounts(s: SparkSession, dir: String, gate: String,
+                                 store: StreamGate.Store): DataFrame = {
     import s.implicits._
     val stream = eventsStream(s, dir)
       .select(col("user_id"), col("ts"))
@@ -185,27 +86,9 @@ object EventQueries {
     // into every task of the downstream aggregate (LocalRelation →
     // ParallelCollectionRDD, java-serialized per task: the observed sf10
     // OOM). The per-user STATE stays on whichever provider the caller
-    // configured — that contrast is these gates' point.
-    val base = java.nio.file.Files
-      .createTempDirectory(namePrefix).toString
-    try {
-      withStatePartitions(s, dir) {
-        val q = sessions.writeStream.outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(s"$base/out")
-        .groupBy("user_id")
-        .agg(count(lit(1)).cast("long").as("n_sessions"),
-          sum(col("n_events")).cast("long").as("n_events"))
-        .orderBy("user_id")
-        .localCheckpoint(true)
-    } finally {
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(base))
+    // chose — that contrast is these gates' point.
+    StreamGate.parquet(s, dir, gate, sessions, store) { (out, _) =>
+      perUserSessions(s.read.parquet(out))
     }
   }
 
@@ -366,8 +249,7 @@ object EventQueries {
     // The per-type peak and sum of trailing counts pin the whole
     // per-row sequence. Identical SQL text runs on DuckDB.
     "q_interval_frame" -> { (s, dir) =>
-      val view = "ev_frame_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val view = StreamGate.uniqueName("ev_frame")
       events(s, dir).createOrReplaceTempView(view)
       try s.sql(
         s"""SELECT event_type,
@@ -484,8 +366,7 @@ object EventQueries {
     // PARSER, so the plan — pushdown included — is identical to the
     // literal spelling.)
     "q_param_sql" -> { (s, dir) =>
-      val view = "ev_param_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val view = StreamGate.uniqueName("ev_param")
       events(s, dir).createOrReplaceTempView(view)
       try s.sql(
         s"""SELECT event_type, count(*) AS n,
@@ -919,15 +800,8 @@ object EventQueries {
       val counts = stream
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val name = "q_stream_hourly_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = counts.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamGate.memory(s, dir, "q_stream_hourly", counts,
+        OutputMode.Complete())
         .select(unix_micros(col("w.start")).as("hour_us"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy("hour_us", "event_type")
@@ -1089,15 +963,8 @@ object EventQueries {
       val stream = eventsStream(s, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      val name = "q_stream_dedup_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = stream.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamGate.memory(s, dir, "q_stream_dedup", stream,
+        OutputMode.Append())
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_users"))
         .orderBy("event_type")
@@ -1125,31 +992,9 @@ object EventQueries {
       val stream = eventsStream(s, dir)
       val sessions = graft.streaming.Sessionize.sessionStream(
         stream, "30 minutes", "0 seconds")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_stream_session_").toString
-      try {
-        withStatePartitions(s, dir) {
-          withConfs(s,
-            "spark.sql.streaming.stateStore.providerClass" ->
-              ("org.apache.spark.sql.execution.streaming.state." +
-                "RocksDBStateStoreProvider")) {
-            val q = graft.streaming.Sessionize.writer(sessions)
-              .format("parquet")
-              .option("path", s"$base/out")
-              .option("checkpointLocation", s"$base/ckpt")
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          }
-        }
-        s.read.parquet(s"$base/out")
-          .groupBy("user_id")
-          .agg(count(lit(1)).cast("long").as("n_sessions"),
-            sum(col("n_events")).cast("long").as("n_events"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(base))
+      StreamGate.parquet(s, dir, "q_stream_session", sessions,
+          StreamGate.Store.RocksDb) { (out, _) =>
+        perUserSessions(s.read.parquet(out))
       }
     },
 
@@ -1160,15 +1005,8 @@ object EventQueries {
       val counts = stream
         .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val name = "q_stream_sliding_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = counts.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamGate.memory(s, dir, "q_stream_sliding", counts,
+        OutputMode.Complete())
         .select(unix_micros(col("w.start")).as("win_us"), col("n"),
           col("sum_value"))
         .orderBy("win_us")
@@ -1358,21 +1196,15 @@ object EventQueries {
       val agg = stream.groupBy("event_type")
         .agg(graft.functions.TopK.collectTopK(
           struct(col("value"), col("event_id")), 3).as("tk"))
-      val name = "q_stream_topk_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      graft.functions.TopK.unpackRanked(s.table(name), Seq("event_type"),
+      val sink = StreamGate.memory(s, dir, "q_stream_topk", agg,
+        OutputMode.Complete())
+      graft.functions.TopK.unpackRanked(sink, Seq("event_type"),
           "tk", "value", "event_id")
         .orderBy("event_type", "rnk")
     },
 
     // Durable-sink streaming ETL: readStream → project/filter →
-    // writeStream to PARQUET FILES with a checkpoint (the production
+    // stream to PARQUET FILES with a checkpoint (the production
     // shape — exactly-once via checkpointed file-sink log), drained with
     // AvailableNow; the files are then read back and aggregated, so the
     // oracle checks the full write–read round trip.
@@ -1381,31 +1213,13 @@ object EventQueries {
         .filter(col("event_type").isin("view", "purchase"))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_stream_etl").toString
-      // cleanup in finally: the tiny aggregate is checkpointed before the
-      // temp sink is deleted, and a failed write/read still cleans up —
-      // nothing accumulates across runs or across failures
-      try {
-        withStatePartitions(s, dir) {
-          val q = stream.writeStream
-            .format("parquet")
-            .option("path", s"$base/out")
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.read.parquet(s"$base/out")
+      StreamGate.parquet(s, dir, "q_stream_etl", stream) { (out, _) =>
+        s.read.parquet(out)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             count_distinct(col("user_id")).as("n_users"),
             dsum(col("value")).as("sum_value"))
           .orderBy("event_type")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(base))
       }
     },
 
@@ -1441,15 +1255,8 @@ object EventQueries {
       val agg = stream
         .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      val name = "q_stream_hll_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val est = s.table(name)
+      val est = StreamGate.memory(s, dir, "q_stream_hll", agg,
+        OutputMode.Complete())
         .select(unix_micros(col("w.start")).as("win_us"),
           col("event_type"),
           round(hll_sketch_estimate(col("sk")), 0).cast("long")
@@ -1529,15 +1336,8 @@ object EventQueries {
       val stream = eventsStream(s, dir)
       val agg = stream.groupBy("event_type")
         .agg(graft.functions.CountMin.sketch(col("user_id")).as("sk"))
-      val name = "q_stream_cms_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val sketches = s.table(name)
+      val sketches = StreamGate.memory(s, dir, "q_stream_cms", agg,
+        OutputMode.Complete())
         .as[(String, Array[Long])].collect().toMap
       val w = Window.partitionBy("event_type")
         .orderBy(col("cnt").desc, col("user_id"))
@@ -1569,15 +1369,8 @@ object EventQueries {
       val agg = stream.groupBy("event_type")
         .agg(round(graft.functions.MIAggregate.mi(
           floor(col("value")), hour(col("ts"))), 6).as("mi"))
-      val name = "q_stream_mi_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("event_type")
+      StreamGate.memory(s, dir, "q_stream_mi", agg,
+        OutputMode.Complete()).orderBy("event_type")
     },
 
     // STREAM-STREAM inner join with watermarks on both sides and an
@@ -1612,15 +1405,8 @@ object EventQueries {
         col("u") === col("u_b") &&
           col("ts_b") > col("ts_v") &&
           col("ts_b") <= col("ts_v") + expr("INTERVAL 1 HOUR"))
-      val name = "q_stream_join_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = joined.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamGate.memory(s, dir, "q_stream_join", joined,
+        OutputMode.Append())
         .groupBy(col("u").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"), dsum(col("buy_value")).as("buy_sum"))
         .orderBy("user_id")
@@ -1656,14 +1442,8 @@ object EventQueries {
           col("ts_b") > col("ts_v") &&
           col("ts_b") <= col("ts_v") + expr("INTERVAL 1 HOUR"),
         "left_outer")
-      val name = "q_stream_outer_join_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = joined.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val sink = StreamGate.memory(s, dir, "q_stream_outer_join", joined,
+        OutputMode.Append())
       // The deterministic expiry cutoff, from BATCH data: the exact
       // watermark both sides can compute (min of the two sides' max
       // event time, minus the 7d delay), minus the 1h match window,
@@ -1676,7 +1456,7 @@ object EventQueries {
         .select((col("wmax") - expr("INTERVAL 7 DAYS")
           - expr("INTERVAL 1 HOUR")
           - expr("INTERVAL 1 SECOND")).as("cut"))
-      s.table(name)
+      sink
         .crossJoin(broadcast(cut))
         .filter(col("ts_b").isNotNull || col("ts_v") < col("cut"))
         .groupBy(col("u").as("user_id"))
@@ -1703,15 +1483,8 @@ object EventQueries {
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val name = "q_stream_enrich_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("mktsegment", "event_type")
+      StreamGate.memory(s, dir, "q_stream_enrich", agg,
+        OutputMode.Complete()).orderBy("mktsegment", "event_type")
     },
 
     // Custom-state streaming (flatMapGroupsWithState + EventTimeTimeout,
@@ -1725,7 +1498,8 @@ object EventQueries {
     // `ts.getTime`, so microsecond components truncate before the gap
     // compare — a deliberate, mirrored precision contract).
     "q_stream_state_sessions" -> { (s, dir) =>
-      stateSessionCounts(s, dir, "q_stream_state_sessions_")
+      stateSessionCounts(s, dir, "q_stream_state_sessions",
+        StreamGate.Store.Heap)
     },
 
     // The SAME custom-state sessionization under the RocksDB state store
@@ -1737,14 +1511,8 @@ object EventQueries {
     // Answers to the byte-identical oracle as q_stream_state_sessions:
     // the provider swap is PROVEN hash-invisible, not assumed.
     "q_stream_rocksdb_sessions" -> { (s, dir) =>
-      withConfs(s,
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"),
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled" -> "true") {
-        stateSessionCounts(s, dir, "q_stream_rocksdb_sessions_")
-      }
+      stateSessionCounts(s, dir, "q_stream_rocksdb_sessions",
+        StreamGate.Store.RocksDbChangelog)
     },
 
     // transformWithState LIST STATE — the third v2 primitive: a BOUNDED
@@ -1758,7 +1526,7 @@ object EventQueries {
     // emissions are bit-identical to the untimed spelling (the oracle is
     // unchanged), and the run drains by expected-count polling because
     // ProcessingTime TimeMode never terminates AvailableNow (see
-    // drainTws). One micro-batch per input file makes the expected
+    // StreamGate.drained). One micro-batch per input file makes the expected
     // emission count exact: one row per (user, file).
     "q_stream_tws_mink" -> { (s, dir) =>
       import s.implicits._
@@ -1768,23 +1536,10 @@ object EventQueries {
         .as[graft.streaming.ValuedEvent]
       val out = graft.streaming.Tws.minKValues(stream, 3,
         ttl = Some(graft.streaming.Tws.DefaultStateTtl))
-      val name = "q_stream_tws_mink_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
       val expected = events(s, dir)
         .select(col("user_id"), input_file_name().as("f"))
         .distinct().count()
-      withStatePartitions(s, dir) {
-        withConfs(s,
-          "spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")) {
-          drainTws(s, name, expected) {
-            out.writeStream.outputMode(OutputMode.Append())
-              .format("memory").queryName(name).start()
-          }
-        }
-      }
-      s.table(name)
+      StreamGate.drained(s, dir, "q_stream_tws_mink", out, expected)
         .groupBy("user_id")
         .agg(max(col("n_seen")).cast("long").as("n_events"),
           min(col("mink_sum")).cast("long").as("min3_sum"))
@@ -1823,30 +1578,12 @@ object EventQueries {
         .drop("copy")
       val deduped = doubled.withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark("event_id")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_dedup_wm_").toString
-      try {
-        withStatePartitions(s, dir) {
-          withConfs(s,
-            "spark.sql.streaming.stateStore.providerClass" ->
-              ("org.apache.spark.sql.execution.streaming.state." +
-                "RocksDBStateStoreProvider")) {
-            val q = deduped.writeStream.outputMode(OutputMode.Append())
-              .format("parquet")
-              .option("path", s"$base/out")
-              .option("checkpointLocation", s"$base/ckpt")
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          }
-        }
-        s.read.parquet(s"$base/out")
+      StreamGate.parquet(s, dir, "q_stream_dedup_wm", deduped,
+          StreamGate.Store.RocksDb) { (out, _) =>
+        s.read.parquet(out)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"))
           .orderBy("event_type")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(base))
       }
     },
 
@@ -1866,42 +1603,30 @@ object EventQueries {
     // store introspection.
     "q_stream_tws_ttl" -> { (s, dir) =>
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_ttl_").toString
       val ev = events(s, dir)
         .select(col("user_id"), col("event_type"), col("event_id"))
-      ev.filter(col("event_id") % 2 === 0).drop("event_id").coalesce(1)
-        .write.mode("overwrite").parquet(base)
-      ev.filter(col("event_id") % 2 === 1).drop("event_id").coalesce(1)
-        .write.mode("append").parquet(base)
-      val stream = s.readStream
-        .schema(ev.drop("event_id").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(base)
-        .as[graft.streaming.UserTypedEvent]
-      val out = graft.streaming.Tws.ttlCounts(stream,
-        java.time.Duration.ofMillis(1L))
-      val name = "q_stream_tws_ttl_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        withConfs(s,
-          "spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")) {
-          // ProcessingTime TimeMode → drain by the EXACT expected
-          // emission count — one row per (user, file-batch) group,
-          // computable from the two written halves (see drainTws).
-          val expected = s.read.parquet(base)
-            .select(col("user_id"), input_file_name().as("f"))
-            .select(col("user_id"), col("f")).distinct().count()
-          drainTws(s, name, expected) {
-            out.writeStream.outputMode(OutputMode.Append())
-              .format("memory").queryName(name).start()
-          }
-        }
-      }
-      s.table(name)
-        .groupBy("user_id")
+      // The memory sink holds the result, so the input copy is deleted
+      // as soon as the stream has drained.
+      StreamGate.withTempDir("graft_q_stream_tws_ttl_") { base =>
+        ev.filter(col("event_id") % 2 === 0).drop("event_id").coalesce(1)
+          .write.mode("overwrite").parquet(base)
+        ev.filter(col("event_id") % 2 === 1).drop("event_id").coalesce(1)
+          .write.mode("append").parquet(base)
+        val stream = s.readStream
+          .schema(ev.drop("event_id").schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(base)
+          .as[graft.streaming.UserTypedEvent]
+        val out = graft.streaming.Tws.ttlCounts(stream,
+          java.time.Duration.ofMillis(1L))
+        // ProcessingTime TimeMode → drain by the EXACT expected
+        // emission count — one row per (user, file-batch) group,
+        // computable from the two written halves.
+        val expected = s.read.parquet(base)
+          .select(col("user_id"), input_file_name().as("f"))
+          .distinct().count()
+        StreamGate.drained(s, dir, "q_stream_tws_ttl", out, expected)
+      }.groupBy("user_id")
         .agg(sum(col("n")).cast("long").as("n_events"),
           max(col("resumed")).as("resumed"))
         .orderBy("user_id")
@@ -1927,25 +1652,17 @@ object EventQueries {
         .as[graft.streaming.UserEvent]
       val sessions = graft.streaming.Stateful
         .statefulSessions(stream, GapUs / 1000L, "0 seconds")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_").toString
       // Parquet sink for the (discarded) emissions — the gate reads the
       // STATE STORE; a memory sink would hold every closed session on
       // the driver heap for nothing (r14 sf10 lesson).
-      withStatePartitions(s, dir) {
-        val q = sessions.writeStream.outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", s"$ckpt.out")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      StreamGate.parquet(s, dir, "q_state_reader", sessions) { (_, ckpt) =>
+        s.read.format("statestore").load(ckpt)
+          .select(col("key.value").as("user_id"),
+            col("value.groupState.startMs").as("start_ms"),
+            col("value.groupState.endMs").as("end_ms"),
+            col("value.groupState.n").cast("long").as("n_open_events"))
+          .orderBy("user_id")
       }
-      s.read.format("statestore").load(ckpt)
-        .select(col("key.value").as("user_id"),
-          col("value.groupState.startMs").as("start_ms"),
-          col("value.groupState.endMs").as("end_ms"),
-          col("value.groupState.n").cast("long").as("n_open_events"))
-        .orderBy("user_id")
     },
 
     // The v2 half of the state-store reader surface: the SAME held-
@@ -1963,32 +1680,20 @@ object EventQueries {
         .as[graft.streaming.UserEvent]
       val sessions = graft.streaming.Tws
         .timerSessions(stream, GapUs / 1000L, "0 seconds")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_tws_").toString
       // Parquet sink for the (discarded) emissions — the gate reads the
       // STATE STORE; a memory sink would still hold every closed session
       // on the driver heap for nothing (r14 sf10 lesson).
-      withStatePartitions(s, dir) {
-        withConfs(s,
-          "spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")) {
-          val q = sessions.writeStream.outputMode(OutputMode.Append())
-            .format("parquet")
-            .option("path", s"$ckpt.out")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+      StreamGate.parquet(s, dir, "q_tws_state_reader", sessions,
+          StreamGate.Store.RocksDb) { (_, ckpt) =>
+        s.read.format("statestore")
+          .option("stateVarName", "open")
+          .load(ckpt)
+          .select(col("key.value").as("user_id"),
+            col("value.startMs").as("start_ms"),
+            col("value.endMs").as("end_ms"),
+            col("value.n").cast("long").as("n_open_events"))
+          .orderBy("user_id")
       }
-      s.read.format("statestore")
-        .option("stateVarName", "open")
-        .load(ckpt)
-        .select(col("key.value").as("user_id"),
-          col("value.startMs").as("start_ms"),
-          col("value.endMs").as("end_ms"),
-          col("value.n").cast("long").as("n_open_events"))
-        .orderBy("user_id")
     },
 
     // transformWithState INITIAL STATE — the backfill→stream handoff: a
@@ -2010,27 +1715,14 @@ object EventQueries {
         .as[graft.streaming.UserTypedEvent]
       val out = graft.streaming.Tws.seededCounts(stream, initial,
         ttl = Some(graft.streaming.Tws.DefaultStateTtl))
-      val name = "q_stream_init_state_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
       // Production TTL'd state posture (r11 verdict #4) → ProcessingTime
-      // TimeMode → drain by expected count (see drainTws): one emission
-      // per (user-with-odd-events, file-batch).
+      // TimeMode → drain by expected count (see StreamGate.drained): one
+      // emission per (user-with-odd-events, file-batch).
       val expected = events(s, dir)
         .filter(col("event_id") % 2 === 1)
         .select(col("user_id"), input_file_name().as("f"))
         .distinct().count()
-      withStatePartitions(s, dir) {
-        withConfs(s,
-          "spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")) {
-          drainTws(s, name, expected) {
-            out.writeStream.outputMode(OutputMode.Append())
-              .format("memory").queryName(name).start()
-          }
-        }
-      }
-      s.table(name)
+      StreamGate.drained(s, dir, "q_stream_init_state", out, expected)
         .groupBy("user_id")
         .agg(max(col("n_events")).cast("long").as("n_events"))
         .orderBy("user_id")
@@ -2052,21 +1744,18 @@ object EventQueries {
         java.lang.Long, Array[(String, Long, java.math.BigDecimal)]]()
       val stream = eventsStream(s, dir)
         .select(col("event_type"), col("value"))
-      withStatePartitions(s, dir) {
-        val q = stream.writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            val partial = df.groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                sum(col("value").cast(DecimalType(28, 6))).as("sv"))
-              .collect()
-              .map(r => (r.getString(0), r.getLong(1),
-                r.getDecimal(2).setScale(6)))
-            acc.put(batchId, partial) // idempotent: replace, not append
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      StreamGate.start(s, dir, stream)(_
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          val partial = df.groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              sum(col("value").cast(DecimalType(28, 6))).as("sv"))
+            .collect()
+            .map(r => (r.getString(0), r.getLong(1),
+              r.getDecimal(2).setScale(6)))
+          acc.put(batchId, partial) // idempotent: replace, not append
+          ()
+        }
+        .trigger(Trigger.AvailableNow()).start()).awaitTermination()
       import scala.jdk.CollectionConverters._
       acc.values().asScala.flatten.toSeq
         .toDF("event_type", "n", "sv")
@@ -2095,31 +1784,9 @@ object EventQueries {
       // stateSessionCounts): the emission is the corpus-sized
       // closed-session set — a memory sink re-serializes it into every
       // downstream task as a parallelized local collection.
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_tws_timers_").toString
-      try {
-        withStatePartitions(s, dir) {
-          withConfs(s,
-            "spark.sql.streaming.stateStore.providerClass" ->
-              ("org.apache.spark.sql.execution.streaming.state." +
-                "RocksDBStateStoreProvider")) {
-            val q = sessions.writeStream.outputMode(OutputMode.Append())
-              .format("parquet")
-              .option("path", s"$base/out")
-              .option("checkpointLocation", s"$base/ckpt")
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          }
-        }
-        s.read.parquet(s"$base/out")
-          .groupBy("user_id")
-          .agg(count(lit(1)).cast("long").as("n_sessions"),
-            sum(col("n_events")).cast("long").as("n_events"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(base))
+      StreamGate.parquet(s, dir, "q_stream_tws_timers", sessions,
+          StreamGate.Store.RocksDb) { (out, _) =>
+        perUserSessions(s.read.parquet(out))
       }
     },
 
@@ -2132,7 +1799,7 @@ object EventQueries {
     // batch GROUP BY the stream must converge to. Runs the PRODUCTION
     // state posture (r11 verdict #4): default TTL-bounded state in
     // processing TimeMode, drained by expected-count polling (one row
-    // per (user, file-batch) — see drainTws and q_stream_tws_mink).
+    // per (user, file-batch) — see StreamGate.drained).
     "q_stream_tws_profile" -> { (s, dir) =>
       import s.implicits._
       val stream = eventsStream(s, dir, Map("maxFilesPerTrigger" -> "1"))
@@ -2140,24 +1807,10 @@ object EventQueries {
         .as[graft.streaming.UserTypedEvent]
       val out = graft.streaming.Tws.userTypeStats(stream,
         ttl = Some(graft.streaming.Tws.DefaultStateTtl))
-      val name = "q_stream_tws_profile_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
       val expected = events(s, dir)
         .select(col("user_id"), input_file_name().as("f"))
         .distinct().count()
-      withStatePartitions(s, dir) {
-        // the v2 state API only runs on the RocksDB provider
-        withConfs(s,
-          "spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")) {
-          drainTws(s, name, expected) {
-            out.writeStream.outputMode(OutputMode.Append())
-              .format("memory").queryName(name).start()
-          }
-        }
-      }
-      s.table(name)
+      StreamGate.drained(s, dir, "q_stream_tws_profile", out, expected)
         .groupBy("user_id")
         .agg(max(col("n_types")).cast("long").as("n_types"),
           max(col("n_events")).cast("long").as("n_events"))
@@ -2180,15 +1833,7 @@ object EventQueries {
           expr("unix_micros(ts) div 3600000000").as("hb"))
         .as[graft.streaming.TypedHourEvent]
       val scored = graft.streaming.Stateful.streamEwmaBurst(stream)
-      val name = "q_stream_ewma_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = scored.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamGate.memory(s, dir, "q_stream_ewma", scored, OutputMode.Append())
         .groupBy("event_type")
         .agg(count(lit(1)).cast("long").as("n_hours"),
           sum(when(col("burst"), 1).otherwise(0)).cast("long")
@@ -2209,15 +1854,8 @@ object EventQueries {
           unix_micros(col("ts")).as("us"), col("event_type"), col("value"))
         .as[graft.streaming.AttrEvent]
       val attributed = graft.streaming.Stateful.streamAttribution(stream)
-      val name = "q_stream_attribution_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      withStatePartitions(s, dir) {
-        val q = attributed.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamGate.memory(s, dir, "q_stream_attribution", attributed,
+        OutputMode.Append())
         .groupBy("attributed")
         .agg(count(lit(1)).as("n_purchases"),
           graft.queries.Q.dsum(col("value")).as("sum_value"))

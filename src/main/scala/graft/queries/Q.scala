@@ -100,25 +100,53 @@ object Q {
         .parquet(s"$dir/events*.parquet"))
   }
 
-  /** Scale-derived width for a gate-local wide exchange (guide §2.5):
-    * a reduce width inherited from the session is whatever the caller
-    * tuned for ITS scale — a gate whose per-task aggregation state
-    * scales with a data-derived domain (the basket pair domain) must
-    * derive its own width from its own input bytes or it OOMs the
-    * moment someone runs it at 100× under a narrow session setting.
-    * ~`bytesPerPartition` of source input per reduce partition, floor =
-    * cluster width (never fewer partitions than cores), cap 2000.
+  /** The session conf that sets the shuffle width. */
+  val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Input bytes under `path` (0 when unreadable), memoized per path:
+    * the testdata dirs are read-only (TESTDATA.md), and paired
+    * multi-scale runs in one JVM key on different paths.
     */
-  def adaptiveWidth(s: SparkSession, dir: String, table: String,
-                    bytesPerPartition: Long = 8L << 20): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val bytes =
+  private val bytesCache = scala.collection.concurrent.TrieMap
+    .empty[String, Long]
+
+  def inputBytes(s: SparkSession, path: String): Long =
+    bytesCache.getOrElseUpdate(path, {
+      val p = new org.apache.hadoop.fs.Path(path)
       try p.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
       catch { case scala.util.control.NonFatal(_) => 0L }
-    math.max(s.sparkContext.defaultParallelism.toLong,
-      math.min(2000L, bytes / bytesPerPartition)).toInt
-  }
+    })
+
+  /** The one data-derived width rule: ~`unit` input bytes per partition,
+    * never fewer than `floor` nor more than `cap`. A width tuned at one
+    * scale and pinned as a constant is the defect class that OOM'd the
+    * sf10 pair-domain aggregate, so every width is derived from data.
+    */
+  def width(bytes: Long, unit: Long, floor: Int, cap: Int): Int =
+    math.max(floor.toLong, math.min(cap.toLong, bytes / unit)).toInt
+
+  /** State partitions of a stateful stream over `dir`'s events: a
+    * streaming query creates and commits one state store per partition
+    * per stateful operator per micro-batch, so for kilobyte-scale state
+    * dozens of partitions are pure fixed overhead (measured ~2× on the
+    * stream-stream join). 4 MB of events per partition, floor 8 (2/4/8
+    * measured flat at sf0.1, so the floor is not a tuning cliff), cap
+    * 200: 8 at sf0.01 and sf0.1, 28 at sf10. Each gate run starts a
+    * fresh checkpoint, so the count is free to differ per scale.
+    */
+  def stateWidth(s: SparkSession, dir: String): Int =
+    width(inputBytes(s, s"$dir/events.parquet"), 4L << 20, 8, 200)
+
+  /** Reduce width of a wide exchange over the input at `path` (guide
+    * §2.5): a width inherited from the session is whatever the caller
+    * tuned for ITS scale, and a reduce whose per-task state grows with
+    * the data OOMs at 100× under a narrow setting. 8 MB of input per
+    * partition, floor = cluster width, cap 2000.
+    */
+  def exchangeWidth(s: SparkSession, path: String): Int =
+    width(inputBytes(s, path), 8L << 20,
+      s.sparkContext.defaultParallelism, 2000)
 
   /** Order-independent exact sum of a double column, returned as double. */
   def dsum(c: Column, scale: Int = 4): Column =

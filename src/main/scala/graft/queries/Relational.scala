@@ -341,7 +341,7 @@ object Relational {
             col("a.l_partkey") < col("b.l_partkey"))
         .select(col("a.l_partkey").as("part_a"),
           col("b.l_partkey").as("part_b"))
-        .repartition(adaptiveWidth(s, dir, "lineitem"),
+        .repartition(exchangeWidth(s, s"$dir/lineitem.parquet"),
           col("part_a"), col("part_b"))
         .groupBy("part_a", "part_b")
         .agg(count(lit(1)).as("n_both"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.ops.Pin
 import graft.queries.Q._
+import graft.queries.StreamGate.withTempDir
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -69,16 +70,6 @@ object SourceQueries {
             expr(s"substring(${f.name}, 2)"))
             .otherwise(col(f.name)))
       else d
-    }
-  }
-
-  private def withTempDir[A](prefix: String)(f: String => A): A = {
-    val base = java.nio.file.Files.createTempDirectory(prefix).toString
-    try f(base)
-    finally {
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(base))
-      ()
     }
   }
 

@@ -1013,7 +1013,7 @@ object TextQueries {
       // twice per micro-batch (dedupNewBatch + appendToIndex each paid
       // the ML reader's multi-job round trip).
       val (idxCfg, idxModel) = D.loadModel(s, idxPath)
-      val q = stream.writeStream
+      StreamGate.start(s, dir, stream)(_
         .option("checkpointLocation", ckptDir)
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           // Sign the micro-batch ONCE and share it between the query and
@@ -1032,8 +1032,7 @@ object TextQueries {
           ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .start()).awaitTermination()
       import scala.jdk.CollectionConverters._
       val allPairs = found.values().asScala.flatten.toSeq
         .toDF("batch_id", "corpus_id", "jaccard_dist")

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** Structured-Streaming sessionization built on the native `session_window`
   * operator. The same transform runs in batch mode (used by the
@@ -36,10 +35,4 @@ object Sessionize {
   def sessionStream(events: DataFrame, gap: String,
                     lateness: String): DataFrame =
     sessionCounts(events.withWatermark("ts", lateness), gap)
-
-  /** Convenience writer: append session rows to an in-memory sink (tests)
-    * or any sink the caller configures further.
-    */
-  def writer(sessions: DataFrame): DataStreamWriter[Row] =
-    sessions.writeStream.outputMode(OutputMode.Append)
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -41,7 +42,7 @@ class SessionizeSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     val input = MemoryStream[(Long, Timestamp)]
     val sessions = Sessionize.sessionStream(
       input.toDF().toDF("user_id", "ts"), "30 minutes", "10 minutes")
-    val query = Sessionize.writer(sessions)
+    val query = sessions.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("sessions_test").start()
     try {
       // batch 1: two events in one session for user 1
