@@ -17,9 +17,13 @@ import org.apache.spark.sql.SparkSession
   * cluster launch into a local one or override the submitter's shuffle
   * width. The session time zone is the exception: it is always UTC,
   * because `Q.normalizeEventTs` reads naive timestamps in the session
-  * zone and the gates' answers must match the DuckDB oracle's.
+  * zone and the gates' answers must match the DuckDB oracle's. A preset
+  * zone other than UTC is logged once at WARN.
   */
 object Sessions {
+
+  private val TimeZone = "spark.sql.session.timeZone"
+  private val warnedTimeZone = new java.util.concurrent.atomic.AtomicBoolean
 
   /** The confs a builder gets for `cpus` cores when `preset` holds the
     * keys `new SparkConf()` already carries: the UTC time zone, and each
@@ -27,10 +31,18 @@ object Sessions {
     */
   def settings(cpus: Int, preset: String => Boolean)
       : Seq[(String, String)] =
-    ("spark.sql.session.timeZone" -> "UTC") +: Seq(
+    (TimeZone -> "UTC") +: Seq(
       "spark.master" -> s"local[$cpus]",
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.ui.enabled" -> "false").filterNot { case (k, _) => preset(k) }
+
+  /** The warning for a preset session time zone (`preset`) that the
+    * builder overrides with UTC, naming both values; None for UTC or none.
+    */
+  def timeZoneOverride(preset: Option[String]): Option[String] =
+    preset.filter(_ != "UTC").map(tz => s"$TimeZone = $tz from the " +
+      "launch conf is overridden with UTC: the gates read naive " +
+      "timestamps in the session zone")
 
   /** `SPARK_GRAFT_CPUS`, or `default` when it is unset. */
   def cpus(default: Int): Int =
@@ -45,7 +57,11 @@ object Sessions {
     */
   def builderFor(cpus: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
-    settings(cpus, new SparkConf().contains _)
+    val preset = new SparkConf()
+    timeZoneOverride(preset.getOption(TimeZone))
+      .filter(_ => warnedTimeZone.compareAndSet(false, true))
+      .foreach(org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
+    settings(cpus, preset.contains _)
       .foreach { case (k, v) => b.config(k, v) }
     b
   }

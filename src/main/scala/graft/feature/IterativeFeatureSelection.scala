@@ -2,7 +2,7 @@ package graft.feature
 
 import graft.stats.{CellTable, Coded, CodedRows, MRMR, MutualInformation,
   RowMRMR, RowScore, SelectionScore}
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkException}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.rdd.RDD
@@ -35,14 +35,13 @@ private[feature] case class BlockSlice(label: Boolean, id: Long, bid: Long,
   * (`reference:src/main/scala/ifs/ml/feature/IterativeFeatureSelection.scala`)
   * in idiomatic Spark SQL. Differences are physical, never semantic:
   *
-  *   - Pair counting (reference `:65-97`, an RDD `countByValue` that
-  *     collects every distinct tuple to the driver) codes each column's
-  *     levels once per fit ([[graft.stats.Coded]]) and counts pairs of
-  *     codes into dense per-partition contingency tables
-  *     ([[pairCellCounts]]), merged in ONE `reduceByKey` and folded to MI
-  *     on the executors: one job per counting call, and driver memory
-  *     O(features), not O(features · levels²) — the property that lets
-  *     this run against 100 TB inputs.
+  *   - Pair counting (reference `:65-97`, an RDD `countByValue` per
+  *     1000-column batch that collects every distinct tuple to the driver)
+  *     codes each column once per fit ([[graft.stats.Coded]]), counts
+  *     pairs of codes per partition ([[pairCellCounts]]) and folds each
+  *     pair to MI on the executors after ONE `reduceByKey`: one job per
+  *     round at any width, driver memory O(features), not O(features ·
+  *     levels²).
   *   - MI terms are memoized across rounds (reference recomputes every round
   *     from scratch, SURVEY.md §2.4 Q5): round 0 computes MI(cand, label)
   *     for every candidate; round r>0 computes only MI(cand, s_{r-1}) against
@@ -63,11 +62,6 @@ object IterativeFeatureSelection {
     */
   val DefaultMaxCategories = 10000
 
-  /** Columns per distributed counting job
-    * (`reference:IterativeFeatureSelection.scala:57`).
-    */
-  val DefaultBatchSize = 1000
-
   /** Max instance count (= per-feature vector width) accepted by the
     * vector alternate encoding, whose records hold EVERY instance's value
     * (SURVEY.md §1.1): 10M instances ≈ 80 MB per feature vector, near the
@@ -78,6 +72,9 @@ object IterativeFeatureSelection {
   val DefaultMaxInstances = 10000000
 
   /** Conventional encoding: instances are rows, features are columns.
+    * One coding job, then one counting job per round at any width, or one
+    * for the whole pair table when it holds no more pairs than the k
+    * rounds would count.
     *
     * @param df          input with a numeric label column and a VectorType
     *                    features column
@@ -88,7 +85,6 @@ object IterativeFeatureSelection {
     */
   def selectColumns(df: DataFrame, labelCol: String, featuresCol: String,
                     num: Int, score: SelectionScore = MRMR,
-                    batchSize: Int = DefaultBatchSize,
                     maxCategories: Int = DefaultMaxCategories)
   : Seq[(Int, Double)] = {
     val data = df.select(
@@ -101,39 +97,25 @@ object IterativeFeatureSelection {
       // missing positions count as NULL, and an empty input selects none.
       val numCols = coded.map(_.width).fold(0)(math.max)
       val k = math.min(num, numCols)
-      def mi(pairs: Seq[(Int, Int)]) = pairStats(data, pairs, maxCategories,
-        coded).map { case (p, st) => p -> st._1 }
-      // (cand, other) -> MI; other = -1 encodes the label column.
+      // (cand, other) -> MI; other = -1 encodes the label column. MI is
+      // symmetric: one value serves (i,j) and (j,i).
       val memo = mutable.Map.empty[(Int, Int), Double]
-      // Narrow-matrix fast path: when the FULL pair table (every candidate
-      // vs label + every unordered feature pair) fits one counting job's
-      // budget, compute it up front in a single scan — the greedy loop then
-      // runs entirely on the driver against the memo, so selecting k
-      // features costs 1 distributed job instead of k+1. MI is symmetric,
-      // so one computed value serves both (i,j) directions. Wide matrices
-      // (pairs > batchSize) keep the per-round batched jobs — at that shape
-      // precomputing all O(cols²) pairs would dwarf the k·cols the greedy
-      // rounds actually consume.
-      if (numCols > 0 && numCols.toLong * (numCols + 1) / 2 <= batchSize) {
-        val allPairs = (0 until numCols).map(c => (c, -1)) ++
-          (for { j <- 0 until numCols; i <- (j + 1) until numCols }
-            yield (i, j))
-        mi(allPairs).foreach { case ((i, j), v) =>
-          memo((i, j)) = v
-          if (j >= 0) memo((j, i)) = v
+      def count(pairs: Seq[(Int, Int)]): Unit = if (pairs.nonEmpty)
+        pairStats(data, pairs, maxCategories, coded).foreach {
+          case ((i, j), st) => memo((i, j)) = st._1; memo((j, i)) = st._1
         }
-      }
+      // All-pairs fast path: when the FULL pair table (each candidate vs
+      // the label and every unordered feature pair, numCols·(numCols+1)/2
+      // pairs) holds no more pairs than k rounds over numCols candidates,
+      // i.e. numCols < 2k, count it in one job; the rounds then count none.
+      if (numCols < 2 * k) count((0 until numCols).map((_, -1)) ++
+        (for (j <- 0 until numCols; i <- j + 1 until numCols) yield (i, j)))
       val selected = mutable.ArrayBuffer.empty[(Int, Double)]
       while (selected.size < k) {
         val selIdx = selected.map(_._1).toSeq
         val cands = (0 until numCols).filterNot(selIdx.contains)
         val newest = if (selected.isEmpty) -1 else selIdx.last
-        val missing = cands.filterNot(c => memo.contains((c, newest)))
-        missing.grouped(batchSize).foreach { batch =>
-          mi(batch.map(c => (c, newest))).foreach {
-            case ((c, _), v) => memo((c, newest)) = v
-          }
-        }
+        count(cands.filterNot(c => memo.contains((c, newest))).map((_, newest)))
         val scored = cands.map { c =>
           c -> score.score(memo((c, -1)), selIdx.map(s => memo((c, s))))
         }
@@ -152,7 +134,7 @@ object IterativeFeatureSelection {
     * contents; see its scaladoc for staleness and collisions) and the
     * pair. A later request pays one counting job for its uncached pairs
     * only — sound because [[pairStatsFused]] rounds to 12 decimals, so
-    * batch composition cannot change a value. Statistics, not cached
+    * job composition cannot change a value. Statistics, not cached
     * data: a fit over a matrix another query already profiled (a chi2
     * query after an MI profile) repeats no corpus-scale counting.
     */
@@ -182,17 +164,23 @@ object IterativeFeatureSelection {
     * count into a dense lx × ly table ([[graft.stats.Coded.count]]), whose
     * non-zero cells go to a [[graft.stats.CellCounter]]; its flush-on-full
     * bounds memory. NULL values (and positions past a short array) count
-    * as their own level, as a SQL group key would.
+    * as their own level, as a SQL group key would. A chunk column past
+    * `maxCategories` non-NULL levels raises before its pair counts, so
+    * every column's cells stay bounded and the pass needs no cell cap.
     */
   private[graft] def pairCellCounts(coded: RDD[CodedRows],
-                                    pairs: Seq[(Int, Int)])
+                                    pairs: Seq[(Int, Int)],
+                                    maxCategories: Int)
   : RDD[(Long, Array[Long])] = {
     val ps = pairs.toArray
-    coded.mapPartitions(CellTable.countPartition(_, "pair") { (m, counter) =>
+    coded.mapPartitions(CellTable.countPartition(_, None) { (m, counter) =>
       var p = 0
       while (p < ps.length) {
         val (c, o) = ps(p)
-        Coded.count(m.col(c), if (o < 0) m.label else m.col(o), p, counter)
+        val x = m.col(c)
+        val n = x.levels.count(_ != CellTable.NullBits)
+        if (n > maxCategories) throw tooManyLevels(c, n, maxCategories)
+        Coded.count(x, if (o < 0) m.label else m.col(o), p, counter)
         p += 1
       }
     })
@@ -200,12 +188,18 @@ object IterativeFeatureSelection {
 
   private def round12(v: Double): Double = math.rint(v * 1e12) / 1e12
 
+  private def tooManyLevels(c: Int, levels: Long, maxCategories: Int) =
+    new IllegalArgumentException(s"column $c has $levels distinct values, " +
+      s"more than maxCategories = $maxCategories")
+
   /** One FUSED counting job: [[pairCellCounts]] → one `reduceByKey` of
     * the per-pair tables → one executor-side fold per pair
     * ([[graft.stats.CellTable.foldByKey]]) yielding MI and chi2 from the
     * same table, at ~no cost over counting alone, so whichever family runs
     * second is served by [[pairStats]]' cache. The driver receives |pairs|
-    * scalar tuples; both values round to 12 decimals.
+    * scalar tuples; both values round to 12 decimals. A column past
+    * `maxCategories` in one chunk fails the counting task (its cause is
+    * rethrown); across chunks, the check after the fold raises.
     *
     * @return per pair: (mi, chi2, lx, ly, n)
     */
@@ -213,16 +207,22 @@ object IterativeFeatureSelection {
                              maxCategories: Int)
   : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
     val ps = pairs.toIndexedSeq
-    val folded = CellTable.foldByKey(pairCellCounts(coded, ps), ps.size)
+    val counts = pairCellCounts(coded, ps, maxCategories)
+    val folded = try CellTable.foldByKey(counts, ps.size) catch {
+      case e: SparkException => throw (e.getCause match {
+        case c: IllegalArgumentException => c
+        case _ => e
+      })
+    }
     folded.foreach { case (p, (_, _, levels, _, _)) =>
-      if (levels > maxCategories) throw new IllegalArgumentException(
-        s"column ${ps(p.toInt)._1} has $levels distinct values, " +
-          s"more than maxCategories = $maxCategories")
+      if (levels > maxCategories)
+        throw tooManyLevels(ps(p.toInt)._1, levels, maxCategories)
     }
     // Round to 12 decimals: the fold's summation order varies with which
     // OTHER pairs share the job and with partitioning, drifting results
     // by ~1e-15 — enough to flip the argmax on mathematically-tied scores
-    // and make the SELECTED SET depend on batchSize. 12 decimals is far
+    // and make the SELECTED SET depend on whether the all-pairs fast path
+    // or the rounds counted a pair. 12 decimals is far
     // above the drift and below any real MI gap (MI ≤ ln(levels), well
     // inside exact double range), so every path sees identical values.
     folded.map { case (p, (mi, chi2, lx, ly, n)) =>
@@ -237,7 +237,6 @@ object IterativeFeatureSelection {
   private def pairStats(data: DataFrame, allPairs: Seq[(Int, Int)],
                         maxCategories: Int, coded: => RDD[CodedRows])
   : Map[(Int, Int), (Double, Double, Long, Long, Long)] = {
-    require(allPairs.nonEmpty, "pairs must be non-empty")
     val planCache = graft.ops.PlanKey.of(data)
       .map(k => pairStatsCache.getOrElseUpdate((k, maxCategories),
         scala.collection.concurrent.TrieMap.empty))
@@ -446,7 +445,8 @@ object IterativeFeatureSelection {
             report = CellTable.add(report, LabelCell, y.bid, y.len, 1L)
         }
       }
-      val tables = CellTable.countPartition(second.map(_._2), "blocked") {
+      val rows = second.map(_._2)
+      val tables = CellTable.countPartition(rows, Some("blocked")) {
         (x, counter) =>
           if (!x.label && !skip(x.id)) side.get((x.bid, x.s)) match {
             case None if winner.isEmpty => // a few strays name the error

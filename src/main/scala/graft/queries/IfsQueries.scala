@@ -54,16 +54,15 @@ object IfsQueries {
       col("l_orderkey"), col("l_linenumber"))
 
   /** Alternate-encoding matrix: one record per feature, its values across
-    * all instances as a vector, built distributedly in one pass over the
-    * scan (per-partition columnization → shuffle by feature id →
-    * positional re-assembly; see [[rowMatrixBuild]]). The transpose is the
-    * one operation whose output row width equals the instance count — at
-    * the 100 TB design point this encoding is only usable when
-    * instances-per-feature fits a record, which is the same contract as
-    * the reference's alternate input files (SURVEY.md §1.1).
+    * all instances as a vector, assembled from the blocked fixture's
+    * blocks (see [[rowMatrixBuild]]). The vector is the one record whose
+    * width equals the instance count — at the 100 TB design point this
+    * encoding is only usable when instances-per-feature fits a record,
+    * which is the same contract as the reference's alternate input files
+    * (SURVEY.md §1.1).
     *
     * Cached + memoized per (session, dir): three queries (select_rows,
-    * row_model_flags fit + transform) share one transpose computation.
+    * row_model_flags fit + transform) share one assembly.
     */
   def rowMatrix(s: SparkSession, dir: String): DataFrame =
     rowMatrixBuild(s, dir)
@@ -96,53 +95,30 @@ object IfsQueries {
     graft.ops.SessionCache.getOrElsePin(s,
       fixtureKey(s, dir, "ifs_rowmatrix")) {
       import s.implicits._
-      // Instance order is the parquet SCAN order — deterministic for a
-      // fixed input (file listing and split boundaries are stable), which
-      // is all the alternate encoding needs: vector positions must agree
-      // between features and the label row (they ride the same pass) and
-      // MI is instance-order invariant, so no global sort is required at
-      // all. Each scan partition is columnized in place (primitive
-      // builders over InternalRows — no Row boxing) and the chunks
-      // shuffle keyed by feature id, one (partIdx, chunk) record per
-      // partition per feature; assembly orders chunks by partition index,
-      // so offsets are implied. ONE pass over the data — no sort, no
-      // range-sampling pass, no cached intermediate. The label column
-      // rides along as pseudo-feature -1 (dropped from the returned
-      // matrix), so [[labelsRow]] shares the pass too.
-      val projDF = matrix(s, dir).select("label", "f")
-      val nFeatures = featureDefs.size
-      val chunks = projDF.queryExecution.toRdd
-        .mapPartitionsWithIndex { (pi, it) =>
-          chunkedColumnize(pi, it, nFeatures)
-            .map { case (fid, bid, arr) => (fid, (bid, arr)) }
-        }
-      chunks
-        .groupByKey(math.min(nFeatures + 1, s.sparkContext.defaultParallelism))
-        .map { case (fid, chs) =>
-          val parts = chs.toArray.sortBy(_._1)
-          var total = 0
-          parts.foreach(p => total += p._2.length)
-          val out = new Array[Double](total)
-          var off = 0
-          parts.foreach { case (_, a) =>
-            System.arraycopy(a, 0, out, off, a.length)
-            off += a.length
-          }
-          (fid, org.apache.spark.ml.linalg.Vectors.dense(out))
+      // One transpose per scale: each id's vector (the label as id -1) is
+      // its blocks of the pinned blocked fixture in bid order, so vector
+      // positions agree between features and the label row, and no second
+      // lineitem scan runs. MI is instance-order invariant, so the scan
+      // order the blocks keep is all the alternate encoding needs.
+      rowMatrixBlocked(s, dir).as[(Long, Long, Array[Double])].rdd
+        .groupBy(_._1,
+          math.min(featureDefs.size + 1, s.sparkContext.defaultParallelism))
+        .map { case (id, blocks) =>
+          (id, org.apache.spark.ml.linalg.Vectors.dense(
+            blocks.toArray.sortBy(_._2).flatMap(_._3)))
         }
         .toDF("id", "features")
     }
 
   /** Block-partitioned alternate-encoding matrix: one record per
     * (feature, scan-partition block) — (id, bid, values), with the label
-    * riding as pseudo-feature -1 exactly like [[rowMatrixBuild]]. This is
-    * the SCALE-FREE alternate layout ([[IterativeFeatureSelection
-    * .selectRowsBlocked]]): the chunk stage of the vector transpose IS the
-    * blocked layout, so the build stops there — no per-feature assembly,
-    * no record wider than one scan partition's rows, no driver-side label
-    * vector. block id = scan partition index (deterministic for a fixed
-    * input, and any consistent tiling is valid — MI is instance-order
-    * invariant). Cached + memoized per (session, dir).
+    * riding as pseudo-feature -1. This is the SCALE-FREE alternate layout
+    * ([[IterativeFeatureSelection.selectRowsBlocked]]) and the one
+    * transpose per scale: [[rowMatrixBuild]] assembles its vectors from
+    * these blocks. No record is wider than [[BlockRows]] rows, and there
+    * is no driver-side label vector. block id = (scan partition, chunk),
+    * deterministic for a fixed input (any consistent tiling is valid — MI
+    * is instance-order invariant). Cached + memoized per (session, dir).
     */
   def rowMatrixBlocked(s: SparkSession, dir: String): DataFrame =
     graft.ops.SessionCache.getOrElsePin(s,
@@ -178,8 +154,8 @@ object IfsQueries {
     * (featureId, blockId, values) record per feature (label as pseudo-
     * feature -1), then resets — at most nFeatures+1 bounded builders
     * live at once, never the whole partition. Block ids compose
-    * (partition, chunk) into one Long so lexicographic chunk order is
-    * numeric order (the vector assembly sorts on it).
+    * (partition, chunk) into one Long so scan order is numeric order (the
+    * vector assembly sorts on it).
     */
   private def chunkedColumnize(
       pi: Int,
@@ -257,6 +233,23 @@ object IfsQueries {
     */
   private def vectorFixtureFits(s: SparkSession, dir: String): Boolean =
     instanceCount(s, dir) <= IterativeFeatureSelection.DefaultMaxInstances
+
+  /** The alternate-encoding greedy selection of the matrix: through the
+    * vector fixture and its driver label row when `vector`, else through
+    * the blocked fixture, split into feature blocks and label blocks.
+    */
+  private def selectRowSide(s: SparkSession, dir: String,
+                            vector: Boolean): Seq[(Long, Double)] =
+    if (vector)
+      IterativeFeatureSelection.selectRows(rowMatrix(s, dir), "id",
+        "features", k,
+        org.apache.spark.ml.linalg.Vectors.dense(labelsRow(s, dir)))
+    else {
+      val blocked = rowMatrixBlocked(s, dir)
+      IterativeFeatureSelection.selectRowsBlocked(
+        blocked.filter(col("id") >= 0L), "id", "bid", "values",
+        blocked.filter(col("id") === -1L).select("bid", "values"), k)
+    }
 
   /** Bench warm-up hook (the r10 warm-state accounting precedent, same
     * as GraphQueries/TextQueries): derive the shared alternate-encoding
@@ -355,22 +348,11 @@ object IfsQueries {
     "ifs_select_rows" -> { (s, dir) =>
       import s.implicits._
       // Auto-route past the width fence, mirroring the public Estimator
-      // surface (RowSelector encoding=auto) and ifs_cross_encoding's
-      // row side: the vector spelling is individually pinned at every
-      // scale inside its contract (sf0.001…sf1); past the fence the
-      // gate demonstrates the scale routing instead of erroring —
-      // exactly what a library user gets.
-      val sel =
-        if (vectorFixtureFits(s, dir))
-          IterativeFeatureSelection.selectRows(
-            rowMatrix(s, dir), "id", "features", k,
-            org.apache.spark.ml.linalg.Vectors.dense(labelsRow(s, dir)))
-        else {
-          val blocked = rowMatrixBlocked(s, dir)
-          IterativeFeatureSelection.selectRowsBlocked(
-            blocked.filter(col("id") >= 0L), "id", "bid", "values",
-            blocked.filter(col("id") === -1L).select("bid", "values"), k)
-        }
+      // surface (RowSelector encoding=auto): the vector spelling is
+      // individually pinned at every scale inside its contract
+      // (sf0.001…sf1); past the fence the gate demonstrates the scale
+      // routing instead of erroring — exactly what a library user gets.
+      val sel = selectRowSide(s, dir, vectorFixtureFits(s, dir))
       sel.zipWithIndex.map { case ((fid, score), r) =>
         (r + 1, featureNames(fid.toInt), math.rint(score * 1e6) / 1e6)
       }.toDF("rnk", "feature", "score").orderBy("rnk")
@@ -385,10 +367,7 @@ object IfsQueries {
     // conventional all pin to one ground truth.
     "ifs_blocked_rows" -> { (s, dir) =>
       import s.implicits._
-      val blocked = rowMatrixBlocked(s, dir)
-      val sel = IterativeFeatureSelection.selectRowsBlocked(
-        blocked.filter(col("id") >= 0L), "id", "bid", "values",
-        blocked.filter(col("id") === -1L).select("bid", "values"), k)
+      val sel = selectRowSide(s, dir, vector = false)
       sel.zipWithIndex.map { case ((fid, score), r) =>
         (r + 1, featureNames(fid.toInt), math.rint(score * 1e6) / 1e6)
       }.toDF("rnk", "feature", "score").orderBy("rnk")
@@ -410,24 +389,12 @@ object IfsQueries {
           array_to_vector(col("f")).as("features"))
       val colSel = IterativeFeatureSelection.selectColumns(
         data, "label", "features", k)
-      // Row side: the vector-alternate layout inside its contract, the
-      // block-partitioned layout past it — so this gate stays GREEN (and
-      // meaningful: three encodings, one oracle) at instance counts where
-      // the vector layout's maxInstances guard would fire, instead of
-      // erroring. Both spellings are individually oracle-pinned
-      // (ifs_select_rows / ifs_blocked_rows); this gate is the
-      // cross-encoding agreement invariant.
-      val rowSel =
-        if (vectorFixtureFits(s, dir))
-          IterativeFeatureSelection.selectRows(
-            rowMatrix(s, dir), "id", "features", k,
-            org.apache.spark.ml.linalg.Vectors.dense(labelsRow(s, dir)))
-        else {
-          val blocked = rowMatrixBlocked(s, dir)
-          IterativeFeatureSelection.selectRowsBlocked(
-            blocked.filter(col("id") >= 0L), "id", "bid", "values",
-            blocked.filter(col("id") === -1L).select("bid", "values"), k)
-        }
+      // Row side routed as in ifs_select_rows, so this gate stays GREEN
+      // (and meaningful: three encodings, one oracle) at instance counts
+      // where the vector layout's maxInstances guard would fire. Both
+      // spellings are individually oracle-pinned (ifs_select_rows /
+      // ifs_blocked_rows); this gate is the cross-encoding agreement.
+      val rowSel = selectRowSide(s, dir, vectorFixtureFits(s, dir))
       colSel.zip(rowSel).zipWithIndex.map {
         case (((ci, cs), (ri, rs)), r) =>
           (r + 1, featureNames(ci), featureNames(ri.toInt),

@@ -38,10 +38,11 @@ private[graft] object CellTable {
     */
   val FlushCap: Int = 1 << 20
 
-  /** Cells one [[CellCounter]] may emit. Millions of distinct cells in one
-    * partition mean some column's cardinality is far past any usable
-    * maxCategories — the post-aggregation guard would throw anyway, so the
-    * same contract error is raised before the emitted buffer can OOM.
+  /** Cells a capped [[CellCounter]] may emit: the blocked pass's, the one
+    * counting pass with no per-column level bound. Millions of distinct
+    * cells in one partition there mean some feature's cardinality is far
+    * past any usable maxCategories, so the contract error is raised
+    * before the shuffle can grow without bound.
     */
   val MaxEmitted: Int = 4 << 20
 
@@ -103,14 +104,14 @@ private[graft] object CellTable {
   /** Count one partition of a Spark counting pass: `read` feeds each input
     * record's cells to the counter, and the cells of every flush leave as
     * one (key, table) chunk per key — lazily, so the partition holds at
-    * most one flush's cells besides the counter. `what` names the pass in
-    * the guard's error.
+    * most one flush's cells besides the counter. `capped` names a pass
+    * whose counter is held to [[MaxEmitted]] cells (see [[CellCounter]]).
     */
-  def countPartition[T](rows: Iterator[T], what: String)(
+  def countPartition[T](rows: Iterator[T], capped: Option[String])(
       read: (T, CellCounter) => Unit)
   : Iterator[(Long, Array[Long])] = {
     val chunks = scala.collection.mutable.LongMap.empty[Array[Long]]
-    val counter = new CellCounter(what, (k, x, y, c) =>
+    val counter = new CellCounter(capped, (k, x, y, c) =>
       chunks(k) = add(chunks.getOrElse(k, Array.emptyLongArray), k, x, y, c))
     Iterator.unfold(false) { done =>
       if (done) None
@@ -167,12 +168,14 @@ private[graft] object CellTable {
 /** One partition's [[CellTable]]: sums cells as they come and, at
   * [[CellTable.FlushCap]] distinct cells, emits them to `sink` and restarts,
   * so memory stays bounded for pathological (continuous-valued) inputs
-  * without a separate fallback path. Emitting more than
-  * [[CellTable.MaxEmitted]] cells raises the maxCategories contract error.
-  * Call [[flush]] once after the last record.
+  * without a separate fallback path. A `capped` counter (the blocked pass,
+  * named in the error) raises the maxCategories contract error past
+  * [[CellTable.MaxEmitted]] emitted cells; the conventional pass bounds
+  * each column's levels before it counts, so it runs uncapped at any
+  * width. Call [[flush]] once after the last record.
   */
-private[graft] final class CellCounter(what: String, sink: CellSink)
-    extends CellSink {
+private[graft] final class CellCounter(capped: Option[String],
+                                       sink: CellSink) extends CellSink {
   private var table = Array.emptyLongArray
   private var emitted = 0L
 
@@ -185,9 +188,11 @@ private[graft] final class CellCounter(what: String, sink: CellSink)
     CellTable.foreach(table)(sink)
     emitted += CellTable.size(table)
     java.util.Arrays.fill(table, 0L)
-    if (emitted > CellTable.MaxEmitted) throw new IllegalArgumentException(
-      s"$what contingency exceeded ${CellTable.MaxEmitted} distinct cells " +
-        "in one partition — a column's cardinality is far above any " +
-        "usable maxCategories (discretize it first)")
+    capped.filter(_ => emitted > CellTable.MaxEmitted).foreach { what =>
+      throw new IllegalArgumentException(
+        s"$what contingency exceeded ${CellTable.MaxEmitted} distinct " +
+          "cells in one partition — a column's cardinality is far above " +
+          "any usable maxCategories (discretize it first)")
+    }
   }
 }

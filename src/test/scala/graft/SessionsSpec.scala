@@ -40,6 +40,17 @@ class SessionsSpec extends AnyFlatSpec with Matchers {
       Seq("spark.sql.session.timeZone" -> "UTC")
   }
 
+  behavior of "Sessions.timeZoneOverride"
+
+  it should "name both zones when a preset zone other than UTC is " +
+    "overridden" in {
+    val w = Sessions.timeZoneOverride(Some("America/New_York"))
+    w.get should include("spark.sql.session.timeZone = America/New_York")
+    w.get should include("overridden with UTC")
+    Sessions.timeZoneOverride(Some("UTC")) shouldBe None
+    Sessions.timeZoneOverride(None) shouldBe None
+  }
+
   behavior of "src/main"
 
   it should "call SparkSession.builder in exactly one file" in {

@@ -7,9 +7,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Spark jobs per fit against the reference's cost model (BASELINE.md):
-  * the conventional encoding may run at most 1 + k·⌈cols/1000⌉ jobs, one
-  * counting pass per selection round; the blocked alternate encoding at
+/** Spark jobs per fit against the reference's cost model (BASELINE.md,
+  * 1 + k·⌈cols/1000⌉ conventional): the conventional encoding may run at
+  * most 1 + k jobs at any width, a coding job and one counting pass per
+  * selection round, or two when the whole pair table is within the k
+  * rounds' pairs; the blocked alternate encoding at
   * most k + 1 (one job per round over one shuffle of block slices, whose
   * map stage later rounds skip) and the vector one at most 2k − 1 (an argmax
   * and a winner fetch per round), or 2k + 1 under a generic `RowScore`, so
@@ -19,7 +21,7 @@ import org.scalatest.matchers.should.Matchers
 class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   private val rows = 200
-  // past the conventional driver's all-pairs fast path (≤ 44 features)
+  // past the conventional driver's all-pairs fast path (cols < 2k)
   private val cols = 50
   private val k = 3
 
@@ -84,16 +86,31 @@ class CostModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
     .setBlockCol("block").setFeaturesCol("values").setLabelRowId(-1L)
     .fit(blockedDF(width)).selectedRows.toSeq
 
-  test("a conventional fit runs at most 1 + k·⌈cols/1000⌉ jobs") {
+  /** Jobs of a conventional fit of the test matrix `width` columns wide. */
+  private def conventionalJobs(width: Int, num: Int): Int = {
     import spark.implicits._
     val df = (0 until rows).map { i =>
-      (label(i).toInt, Vectors.dense(Array.tabulate(cols)(value(i, _))))
+      (label(i).toInt, Vectors.dense(Array.tabulate(width)(value(i, _))))
     }.toDF("label", "features")
     val (selected, jobs, _) = jobsOf(new FeatureSelector()
-      .setNumTopFeatures(k).setLabelCol("label").setFeaturesCol("features")
-      .fit(df).selectedFeatures)
-    selected.length shouldBe k
-    jobs should be <= 1 + k * ((cols + 999) / 1000)
+      .setNumTopFeatures(num).setLabelCol("label")
+      .setFeaturesCol("features").fit(df).selectedFeatures)
+    selected.length shouldBe num
+    jobs
+  }
+
+  test("a conventional fit runs at most 1 + k jobs") {
+    conventionalJobs(cols, k) should be <= 1 + k
+  }
+
+  test("a conventional fit wider than 1,000 columns runs at most 1 + k " +
+    "jobs") {
+    conventionalJobs(1100, k) should be <= 1 + k
+  }
+
+  test("a conventional fit within the all-pairs fast path runs one " +
+    "counting job") {
+    conventionalJobs(6, 4) should be <= 2
   }
 
   test("a blocked fit runs no more jobs than its pinned count") {

@@ -123,18 +123,29 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
     alt.size shouldBe 3
   }
 
-  test("round 1 picks the max-relevance feature, batching preserved") {
+  test("the all-pairs fast path and the per-round path select identically") {
     val (labels, m) = randomMatrix(seed = 5, rows = 100, cols = 6)
-    // batchSize=2 forces multiple counting jobs per round (and disables
-    // the all-pairs fast path). pairMIMulti rounds MI to 12 decimals
-    // precisely so the two paths' memo values are BIT-IDENTICAL despite
-    // the ~1e-15 FP summation-order drift between their plans — so exact
-    // equality is asserted here, scores included.
-    val got = IterativeFeatureSelection.selectColumns(
-      conventionalDF(labels, m), "label", "features", num = 2, batchSize = 2)
-    val ref = IterativeFeatureSelection.selectColumns(
+    // k = 4 counts the whole 21-pair table in one job (6 < 2k); k = 2
+    // counts one job per round (6 ≥ 2k). pairStatsFused rounds MI to 12
+    // decimals precisely so the two paths' memo values are BIT-IDENTICAL
+    // despite the ~1e-15 FP summation-order drift between their jobs — so
+    // exact equality is asserted here, scores included.
+    val fast = IterativeFeatureSelection.selectColumns(
+      conventionalDF(labels, m), "label", "features", num = 4)
+    val perRound = IterativeFeatureSelection.selectColumns(
       conventionalDF(labels, m), "label", "features", num = 2)
-    got shouldBe ref
+    fast.take(2) shouldBe perRound
+  }
+
+  test("a conventional fit wider than 1,000 columns matches the oracle") {
+    val (labels, m) = randomMatrix(seed = 29, rows = 200, cols = 1100)
+    val got = IterativeFeatureSelection.selectColumns(
+      conventionalDF(labels, m), "label", "features", num = 3)
+    val want = greedyOracle(labels, m, 3)
+    got.map(_._1) shouldBe want.map(_._1)
+    got.zip(want).foreach { case ((_, gs), (_, ws)) =>
+      gs shouldBe ws +- 1e-9
+    }
   }
 
   test("custom SelectionScore drives the conventional greedy loop") {
@@ -358,12 +369,42 @@ class IterativeFeatureSelectionSpec extends AnyFunSuite with Matchers
   }
 
   test("maxCategories guard rejects high-cardinality columns") {
+    // each chunk already holds more than 10 levels: the counting task
+    // fails, and the fit rethrows its IllegalArgumentException cause
     import spark.implicits._
     val df = (0 until 50).map(i => (i % 2, Vectors.dense(i.toDouble)))
       .toDF("label", "features")
     an[IllegalArgumentException] should be thrownBy
       IterativeFeatureSelection.selectColumns(
         df, "label", "features", num = 1, maxCategories = 10)
+  }
+
+  test("a column past maxCategories in one chunk fails the coded pass; " +
+    "across chunks, the check after the fold") {
+    import spark.implicits._
+    val df = (0 until 50)
+      .map(i => (i % 2, Seq(i.toDouble, (i % 3).toDouble)))
+      .toDF("label", "f")
+    // the counting pass alone, no fold: every chunk of column 0 holds
+    // more than 10 of its 50 levels (4 chunks of 12–13 rows)
+    val coded = IterativeFeatureSelection.codeMatrix(df)
+    coded.getNumPartitions shouldBe 4
+    val ex = intercept[Exception](IterativeFeatureSelection
+      .pairCellCounts(coded, Seq((1, -1), (0, -1)), maxCategories = 10)
+      .count())
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.matches(
+      "column 0 has 1[23] distinct values, more than maxCategories = 10")))
+    // two levels per chunk, eight in all: only the global check sees it
+    val spread = spark.createDataFrame(spark.sparkContext.parallelize(
+        (0 until 40).map(i => (i % 2, Seq((i / 10 * 2 + i % 2).toDouble))),
+        4)).toDF("label", "f")
+    val global = the[IllegalArgumentException] thrownBy
+      IterativeFeatureSelection.pairMIMulti(spread, Seq((0, -1)), 4)
+    global.getMessage should include(
+      "column 0 has 8 distinct values, more than maxCategories = 4")
   }
 
   test("maxInstances guard fences the alternate encoding's width " +

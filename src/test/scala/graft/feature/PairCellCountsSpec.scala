@@ -93,7 +93,8 @@ class PairCellCountsSpec extends AnyFlatSpec with Matchers
         (for (i <- 0 until nF; j <- 0 until i) yield (i, j))
       val got = canon(cellsOf(
         IterativeFeatureSelection.pairCellCounts(
-          IterativeFeatureSelection.codeMatrix(src), pairs), pairs))
+          IterativeFeatureSelection.codeMatrix(src), pairs,
+          IterativeFeatureSelection.DefaultMaxCategories), pairs))
       val want = canon(oldSpelling(src, pairs))
       withClue(s"trial $trial (nF=$nF): ") { got shouldBe want }
     }

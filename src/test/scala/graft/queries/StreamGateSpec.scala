@@ -83,19 +83,14 @@ class StreamGateSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists,
       s"$dir is not present")
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def graftDirs: Set[String] =
-      Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_")).toSet
-    val before = graftDirs
     // row counts of these gates at sf0.001 before they moved to the runner
     val expected = Seq("q_stream_tws_ttl" -> 15L, "q_state_reader" -> 1L,
       "q_tws_state_reader" -> 1L)
-    for ((gate, rows) <- expected) {
+    leavesNoGraftTemp(for ((gate, rows) <- expected) {
       val out = graft.SparkEntry.queries(gate)(spark, dir)
       withClue(gate)(out.count() shouldBe rows)
       graft.Bench.resetState(spark)
-    }
-    (graftDirs -- before) shouldBe empty
+    })
   }
 
   private def sourceOf(f: java.io.File): String = {

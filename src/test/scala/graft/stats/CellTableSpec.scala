@@ -12,7 +12,7 @@ class CellTableSpec extends AnyFunSuite with Matchers {
     val distinct = CellTable.FlushCap + 5000
     val sums = new Array[Long](distinct)
     var emitted = 0L
-    val counter = new CellCounter("test", (k, x, y, c) => {
+    val counter = new CellCounter(None, (k, x, y, c) => {
       val j = x.toInt
       assert(k == j % 7 && y == 31L * j, s"cell $j")
       sums(j) += c
@@ -26,12 +26,13 @@ class CellTableSpec extends AnyFunSuite with Matchers {
   }
 
   test("emitting more than MaxEmitted cells raises the contract error") {
-    val counter = new CellCounter("test", (_, _, _, _) => ())
+    // the blocked pass's counter: the one capped counting pass
+    val counter = new CellCounter(Some("blocked"), (_, _, _, _) => ())
     (0 until CellTable.MaxEmitted).foreach(j => counter.cell(0L, j, 0L, 1L))
     counter.flush() // exactly MaxEmitted cells is still within the guard
     counter.cell(0L, -1L, 0L, 1L)
     val ex = intercept[IllegalArgumentException](counter.flush())
-    ex.getMessage should include("test contingency exceeded")
+    ex.getMessage should include("blocked contingency exceeded")
   }
 
   test("NaN, NullBits and ±0.0 stay distinct cells") {

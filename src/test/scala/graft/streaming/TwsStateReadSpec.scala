@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.queries.StreamGate
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.flatspec.AnyFlatSpec
@@ -29,9 +30,7 @@ class TwsStateReadSpec extends AnyFlatSpec with Matchers
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_tws_read_").toString
-    try {
+    try leavesNoGraftTemp(StreamGate.withTempDir("graft_tws_read_") { ckpt =>
       val input = MemoryStream[UserEvent]
       val query = Tws.timerSessions(input.toDS(),
           gapMs = 30 * 60 * 1000L, lateness = "0 seconds")
@@ -61,7 +60,7 @@ class TwsStateReadSpec extends AnyFlatSpec with Matchers
           ts("2024-01-01 10:10:00").getTime, 2L),
         (2L, ts("2024-01-01 10:05:00").getTime,
           ts("2024-01-01 10:05:00").getTime, 1L))
-    } finally olds match {
+    }) finally olds match {
       case Some(v) => s.conf.set(
         "spark.sql.streaming.stateStore.providerClass", v)
       case None => s.conf.unset(
